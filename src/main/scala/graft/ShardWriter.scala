@@ -67,11 +67,12 @@ object ShardWriter {
       else shaped
     routed.write.partitionBy("epoch", "shard").parquet(outDir)
 
-    // Partition-directory values read back as inferred ints — cast to
-    // q111's long schema so the summary compares cell-for-cell.
-    spark.read.parquet(outDir)
-      .groupBy(col("epoch").cast("long").as("epoch"),
-        col("shard").cast("long").as("shard"))
+    // Read back under an explicit schema: the partition directories
+    // parse straight into q111's long (epoch, shard), and a write that
+    // shipped no rows (an empty tree: no files to infer a schema from)
+    // summarizes to zero cells instead of failing the read.
+    spark.read.schema("n_tokens LONG, epoch LONG, shard LONG").parquet(outDir)
+      .groupBy(col("epoch"), col("shard"))
       .agg(count(lit(1)).as("n_docs"), sum(col("n_tokens")).as("n_tokens"))
       .orderBy(col("epoch"), col("shard"))
   }

@@ -1097,10 +1097,18 @@ object Similarity {
     * the query vectors come off the driver-memoized [[ivfQueryPanel]]
     * (no job), the candidate side is [[ivfServeIndex]] with a STATIC
     * `cell isin (probe cells)` filter (batch-pruned cached scan, not a
-    * corpus stream), and the top-k window runs over one cell's
-    * candidates per query. `ServeSpec` pins the row identity; the
-    * ScaleBench `serveconc` phase measures the throughput this + FAIR
-    * request pools buys at 8/16/32 concurrent drivers. */
+    * corpus stream), and the top-k heap runs over one cell's
+    * candidates per query.
+    *
+    * EAGER, like [[serveFusedRequest]]: the one action collects the
+    * heap-collapsed rows (≤ k per requested id) and the `(q_id, rank)`
+    * order is applied on the driver, so the result is a local frame. A
+    * plan-side `orderBy` would range-partition those few rows — a
+    * sampling job plus an exchange per request, and both again for
+    * every action on the returned frame. `ServeSpec` pins the row
+    * identity and the exchange-free plan; the ScaleBench `serveconc`
+    * phase measures the throughput this + FAIR request pools buys at
+    * 8/16/32 concurrent drivers. */
   def serveIvfRequest(spark: SparkSession, dir: String, ids: Seq[Long],
       k: Int = 5): DataFrame = {
     val (schema, rows) = ivfQueryPanel(spark, dir)
@@ -1116,7 +1124,7 @@ object Similarity {
     // struct(cos, −vec_id) ≡ the window's (cos DESC, vec_id ASC), and
     // the heap array is emitted best-first so position+1 IS the rank
     // (ServeSpec pins row identity with q44).
-    ivfServeIndex(spark, dir)
+    val top = ivfServeIndex(spark, dir)
       .filter(col("cell").isin(cells: _*))
       .join(broadcast(qs), col("cell") === col("qcell"))
       .withColumn("cos",
@@ -1129,7 +1137,8 @@ object Similarity {
       .select(col("q_id"), col("p.vec_id").as("vec_id"),
         col("p.cell").as("cell"), col("p.cos").as("cos"),
         (col("pos") + 1).cast("int").as("rank"))
-      .orderBy(col("q_id"), col("rank"))
+    val ordered = top.collect().sortBy(r => (r.getLong(0), r.getInt(4)))
+    spark.createDataFrame(ordered.toSeq.asJava, top.schema)
   }
 
   // ---------------------------------------------- fused serving path

@@ -181,4 +181,52 @@ class CurateSpec extends AnyFunSuite with SparkSpec with Matchers {
     }
     e.getMessage should include("already exists")
   }
+
+  test("a tier where every document is rejected ships an empty corpus: " +
+      "no shards, zero manifest and ledger totals, no error") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.{coalesce, col, lit, sum}
+    import graft.pipeline.HashScorer
+    val tier = Files.createTempDirectory("curate-none").toString
+    // Every doc fails q75's mixing coin: its md5u32(id#source) draw
+    // lands at or above the source's weight (mixWMilli), so the last
+    // stage rejects it whatever the earlier stages decide.
+    val source = "feed0"
+    val wMilli = (1L + HashScorer.md5u32(source) % 4L) * 250L
+    val ids = (1L to 400L)
+      .filter(id => HashScorer.md5u32(s"$id#$source") % 1000L >= wMilli)
+      .take(20)
+    ids should have size 20
+    ids.map { id =>
+      val t = (0 until 30).map(j => s"w${(id * 31 + j * 7) % 97}x$id")
+        .mkString(" ")
+      (id, t, "en", source, t.length.toLong)
+    }.toDF("doc_id", "text", "lang", "source", "n_chars")
+      .write.parquet(s"$tier/documents.parquet")
+    (0L until 10L).map { i =>
+      (i, (0 until graft.operators.Similarity.Dim)
+        .map(j => (HashScorer.md5u32(s"$i:$j") % 2001 - 1000).toFloat / 1000f)
+        .toArray,
+        (i % 10).toInt)
+    }.toDF("vec_id", "embedding", "label")
+      .write.parquet(s"$tier/embeddings.parquet")
+
+    val out = Files.createTempDirectory("curate-none-out").toString + "/job"
+    try Curate.run(spark, tier, out, withShards = true, withLedger = true)
+    finally graft.operators.Features.clear(spark)
+
+    // Partitioned artifacts with no rows: committed, no partition dirs.
+    def dirs(artifact: String): Seq[String] =
+      new java.io.File(s"$out/$artifact").listFiles().map(_.getName).toSeq
+    dirs("corpus") should contain("_SUCCESS")
+    dirs("corpus").filter(_.startsWith("split=")) shouldBe empty
+    dirs("shards") should contain("_SUCCESS")
+    dirs("shards").filter(_.startsWith("epoch=")) shouldBe empty
+    def total(df: org.apache.spark.sql.DataFrame, c: String): Long =
+      df.agg(coalesce(sum(col(c)), lit(0L))).head.getLong(0)
+    total(ManifestWriter.read(spark, s"$out/manifest"), "n_docs") shouldBe 0L
+    ManifestWriter.read(spark, s"$out/ledger").count() shouldBe 0L
+    total(spark.read.json(s"$out/report"), "n_mixed") shouldBe 0L
+    total(spark.read.json(s"$out/report"), "n_corpus") shouldBe 20L
+  }
 }

@@ -1,14 +1,24 @@
 package graft
 
+import java.io.File
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
+
+import graft.operators.Similarity
 
 /** The retrieval serving CLI: served rows must be EXACTLY the oracled
   * query's rows (the CLI cannot drift from the audited surface), the
   * query-file filter must restrict per id, `--eval` must ship q168's
-  * scorecard, and the usage/output-dir contracts must hold. */
+  * scorecard, the driver-side artifact writer must produce the bytes
+  * and layout Spark's JSON writer would, and the usage/output-dir
+  * contracts must hold. */
 class ServeSpec extends AnyFunSuite with SparkSpec with Matchers {
 
   private val sfDir = SparkSpec.Sf0001
@@ -163,5 +173,120 @@ class ServeSpec extends AnyFunSuite with SparkSpec with Matchers {
     Serve.run(Array(sfDir, "/tmp/x", "--queries"), Some(spark)) shouldBe 1
     val out = Files.createTempDirectory("serve_dup_").toString
     Serve.run(Array(sfDir, out), Some(spark)) shouldBe 1 // exists already
+  }
+
+  /** The lines of the single `part-*.json` under `dir`, trailing
+    * newline kept as a final empty element so the comparison is
+    * byte-exact. */
+  private def partLines(dir: String): Seq[String] = {
+    val parts = new File(dir).listFiles().toSeq
+      .filter(f => f.getName.startsWith("part-") && f.getName.endsWith(".json"))
+    parts should have size 1
+    Files.readString(parts.head.toPath).split("\n", -1).toSeq
+  }
+
+  /** What `coalesce(1).write.json` ships for the same frame. */
+  private def sparkWriterLines(df: DataFrame): Seq[String] = {
+    val ref = Files.createTempDirectory("serve_ref_").toString + "/spark"
+    df.coalesce(1).write.json(ref)
+    partLines(ref)
+  }
+
+  /** Visible entries of `dir` (checksum sidecars are dot-files). */
+  private def visible(dir: String): Set[String] =
+    new File(dir).listFiles().map(_.getName).filterNot(_.startsWith(".")).toSet
+
+  test("the driver-side writer ships the bytes coalesce(1).write.json " +
+      "writes, for every retriever and serve shape, in one part file " +
+      "plus _SUCCESS with no temp dir left behind") {
+    val dir = Files.createTempDirectory("serve_bytes_")
+    def ids(name: String, body: String): String = {
+      val f = dir.resolve(name)
+      Files.writeString(f, body)
+      f.toString
+    }
+    val panel = Similarity.servableQueryIds(spark, sfDir)
+    val some = ids("some.txt", "1\n6\n999999\n")
+    val unknown = ids("unknown.txt", "999999\n")
+    val q144 = SparkEntry.queries("q144_rrf_fusion")(spark, sfDir)
+    val cases: Seq[(String, Seq[String], DataFrame)] = Seq(
+      ("dense", Seq("--retriever", "dense"),
+        SparkEntry.queries("q38_cosine_topk")(spark, sfDir)),
+      ("lsh", Seq("--retriever", "lsh"),
+        SparkEntry.queries("q39_lsh_ann")(spark, sfDir)),
+      ("ivf", Seq("--retriever", "ivf"),
+        SparkEntry.queries("q44_ivf_ann")(spark, sfDir)),
+      ("fused", Nil, q144),
+      ("fused-ann", Seq("--retriever", "fused-ann"),
+        Similarity.serveFusedAnnRequest(spark, sfDir, panel)),
+      ("fused-ids", Seq("--queries", some),
+        Similarity.serveFusedRequest(spark, sfDir, Seq(1L, 6L, 999999L))),
+      ("ivf-ids", Seq("--retriever", "ivf", "--queries", some),
+        Similarity.serveIvfRequest(spark, sfDir, Seq(1L, 6L, 999999L))),
+      ("diversify", Seq("--diversify", "50"),
+        Similarity.mmrRerank(spark, sfDir, q144, 50)),
+      ("unknown-ids", Seq("--queries", unknown),
+        Similarity.serveFusedRequest(spark, sfDir, Seq(999999L))))
+    for ((name, flags, df) <- cases) withClue(s"$name: ") {
+      val out = s"$dir/$name"
+      Serve.run(Array(sfDir, out) ++ flags, Some(spark)) shouldBe 0
+      visible(out) shouldBe Set("results")
+      val parts = visible(s"$out/results")
+      parts should have size 2
+      parts should contain("_SUCCESS")
+      val got = partLines(s"$out/results")
+      got shouldBe sparkWriterLines(df)
+      if (name == "unknown-ids") got shouldBe Seq("")
+      else got.size should be > 1
+    }
+
+    val out = s"$dir/eval"
+    Serve.run(Array(sfDir, out, "--eval"), Some(spark)) shouldBe 0
+    visible(out) shouldBe Set("results", "eval")
+    visible(s"$out/eval") should have size 2
+    partLines(s"$out/eval") shouldBe sparkWriterLines(
+      SparkEntry.queries("q168_retrieval_eval")(spark, sfDir))
+  }
+
+  test("an id-bounded fused serve is ONE SQL execution end to end: the " +
+      "request's collect, and no write job for the artifact") {
+    val dir = Files.createTempDirectory("serve_actions_")
+    val qf = dir.resolve("queries.txt")
+    Files.writeString(qf, "2\n")
+    def serveOnce(name: String): Int =
+      Serve.run(Array(sfDir, s"$dir/$name", "--queries", qf.toString),
+        Some(spark))
+    serveOnce("warm") shouldBe 0 // memoized panels + cached indexes
+    val (code, executions) =
+      SqlActionCounter.countedSqlExecutions(spark)(serveOnce("counted"))
+    code shouldBe 0
+    executions shouldBe 1
+  }
+
+  test("the ivf request is eager and exchange-free: its one execution " +
+      "heap-collapses per id and the (q_id, rank) order is applied on " +
+      "the driver, not by a range-partitioned sort") {
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        plans.add(qe.executedPlan.toString)
+      override def onFailure(f: String, qe: QueryExecution,
+          e: Exception): Unit = ()
+    }
+    Similarity.serveIvfRequest(spark, sfDir, Seq(2L)).collect() // warm
+    spark.listenerManager.register(listener)
+    val rows = try {
+      val served = Similarity.serveIvfRequest(spark, sfDir, Seq(2L, 5L))
+      val r = served.collect()
+      SqlActionCounter.drainListenerBus(spark)
+      r
+    } finally spark.listenerManager.unregister(listener)
+    rows.map(r => (r.getLong(0), r.getInt(4))).toSeq shouldBe
+      rows.map(r => (r.getLong(0), r.getInt(4))).toSeq.sorted
+    rows.map(_.getLong(0)).toSet shouldBe Set(2L, 5L)
+    val seen = plans.asScala.toSeq
+    seen should not be empty
+    seen.exists(_.contains("Exchange")) shouldBe true
+    all(seen.map(_.toLowerCase)) should not include "rangepartitioning"
   }
 }

@@ -17,6 +17,10 @@ class ShardWriterSpec extends AnyFunSuite with SparkSpec with Matchers {
 
   private val sfDir = SparkSpec.Sf0001
 
+  /** q111's cell-summary schema. */
+  private val CellSchema = Seq("epoch", "shard", "n_docs", "n_tokens")
+    .map(_ -> org.apache.spark.sql.types.LongType)
+
   test("manifest write: directory layout + per-cell counts equal the " +
       "q111 plan; each doc lands exactly once per epoch") {
     import spark.implicits._
@@ -30,6 +34,7 @@ class ShardWriterSpec extends AnyFunSuite with SparkSpec with Matchers {
       .as[(Long, Long, Long, Long)].collect().toSet
     summary.select("epoch", "shard", "n_docs", "n_tokens")
       .as[(Long, Long, Long, Long)].collect().toSet shouldBe plan
+    summary.schema.map(f => (f.name, f.dataType)) shouldBe CellSchema
 
     // Directory tree: every populated plan cell has its epoch=/shard=
     // directory on disk.
@@ -71,5 +76,14 @@ class ShardWriterSpec extends AnyFunSuite with SparkSpec with Matchers {
       e <- root.listFiles().toSeq if e.getName.startsWith("epoch=")
       s <- e.listFiles().toSeq if s.getName.startsWith("shard=")
     } s.listFiles().count(_.getName.endsWith(".parquet")) shouldBe 1
+  }
+
+  test("a write that ships no rows summarizes to zero cells under " +
+      "q111's long schema (no schema inference over an empty tree)") {
+    val out = Files.createTempDirectory("shards").toString + "/empty"
+    val summary = ShardWriter.write(spark,
+      Tables.documents(spark, sfDir).limit(0), out, coalesceFiles = true)
+    summary.schema.map(f => (f.name, f.dataType)) shouldBe CellSchema
+    summary.count() shouldBe 0L
   }
 }
