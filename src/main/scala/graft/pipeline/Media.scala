@@ -178,26 +178,61 @@ object Media {
   final case class ImageMeta(width: Int, height: Int, channels: Int,
       avgLuma: Double)
 
+  /** Decode to sRGB pixels, one `Int` per pixel in row order, whatever
+    * the source colour model (palette PNG, grayscale JPEG, 16-bit gray,
+    * CMYK…), so downstream stats see converted pixels — the reference's
+    * `convert("RGB")`.
+    *
+    * The bytes decode from a `MemoryCacheImageInputStream`: no temp file
+    * is written, and ImageIO's JVM-global cache settings are neither read
+    * nor set, so a missing `java.io.tmpdir` cannot fail a decode. No
+    * matching reader still yields null (thrown here as undecodable), and
+    * a reader still throws `IIOException` on corrupt data.
+    *
+    * A raster with one `TYPE_BYTE` data element per pixel (8-bit and
+    * packed gray, palette PNG/GIF/BMP, gray JPEG) has at most 256
+    * distinct elements, so its pixels map through a 256-entry table
+    * whose entry v is `getColorModel.getRGB(Array(v))`: the very call
+    * `BufferedImage.getRGB` makes for that pixel, made once per distinct
+    * value instead of once per pixel (an entry is filled when its value
+    * first occurs), so the result is bit-identical by construction. Every
+    * other raster (16-bit gray, RGB, ARGB, …) takes the bulk `getRGB`. */
+  private[pipeline] def decodeRgb(content: Array[Byte]): (java.awt.image.BufferedImage, Array[Int]) = {
+    if (content.isEmpty) throw new IllegalArgumentException("empty media object")
+    val img = javax.imageio.ImageIO.read(new javax.imageio.stream.MemoryCacheImageInputStream(
+      new java.io.ByteArrayInputStream(content)))
+    if (img == null) throw new IllegalArgumentException("undecodable image")
+    val (w, h) = (img.getWidth, img.getHeight)
+    if (!byteIndexed(img.getRaster)) return (img, img.getRGB(0, 0, w, h, null, 0, w))
+    val elems = img.getRaster.getDataElements(0, 0, w, h, null).asInstanceOf[Array[Byte]]
+    val cm = img.getColorModel
+    val table = new Array[Int](256)
+    val filled = new Array[Boolean](256)
+    val px = new Array[Int](elems.length)
+    var i = 0
+    while (i < px.length) {
+      val v = elems(i) & 0xff
+      if (!filled(v)) {
+        table(v) = cm.getRGB(Array(elems(i)))
+        filled(v) = true
+      }
+      px(i) = table(v)
+      i += 1
+    }
+    (img, px)
+  }
+
+  /** [[decodeRgb]]'s table guard: one `TYPE_BYTE` data element per pixel. */
+  private[pipeline] def byteIndexed(raster: java.awt.image.Raster): Boolean =
+    raster.getNumDataElements == 1 &&
+      raster.getTransferType == java.awt.image.DataBuffer.TYPE_BYTE
+
   /** REAL image decode via `javax.imageio.ImageIO` — the JVM twin of the
     * reference's `Image.open(BytesIO).convert("RGB")`
     * (`/root/reference/python/predict_batch_threaded_local.py:100-108`).
     * Undecodable bytes (ImageIO returns null) or empty content throw;
     * [[decodeAll]] maps that to the sentinel row, exactly the
     * reference's per-image try/except policy. */
-  /** Decode + bulk sRGB pixel fetch. One `getRGB(0,0,w,h,…)` call per
-    * image — per-pixel `getRGB(x, y)` pays bounds checks, color-model
-    * conversion dispatch, and a virtual call PER PIXEL (~12M calls on a
-    * 12 MP photo); the bulk form converts the whole raster in one
-    * native-backed pass. getRGB yields sRGB regardless of the source
-    * color model (palette PNG, grayscale JPEG, CMYK…), so downstream
-    * stats see converted pixels — the reference's `convert("RGB")`. */
-  private def decodeRgb(content: Array[Byte]): (java.awt.image.BufferedImage, Array[Int]) = {
-    if (content.isEmpty) throw new IllegalArgumentException("empty media object")
-    val img = javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(content))
-    if (img == null) throw new IllegalArgumentException("undecodable image")
-    (img, img.getRGB(0, 0, img.getWidth, img.getHeight, null, 0, img.getWidth))
-  }
-
   def decodeImage(content: Array[Byte]): ImageMeta = {
     val (img, px) = decodeRgb(content)
     var sum = 0L
@@ -407,10 +442,6 @@ object Media {
       batchSize: Int = DefaultBatchSize): Dataset[MediaMeta] = {
     import objects.sparkSession.implicits._
     objects.mapPartitions { it =>
-      // Per-partition decoder init happens here. ImageIO's reader
-      // registry scan is per-JVM; disabling the on-disk cache keeps
-      // decode purely in-memory for task-sized payloads.
-      javax.imageio.ImageIO.setUseCache(false)
       it.grouped(batchSize).flatMap { batch =>
         batch.map { m =>
           try {
@@ -486,7 +517,6 @@ object Media {
       batchSize: Int = DefaultBatchSize): Dataset[MediaFeatures] = {
     import objects.sparkSession.implicits._
     objects.mapPartitions { it =>
-      javax.imageio.ImageIO.setUseCache(false)
       it.grouped(batchSize).flatMap { batch =>
         batch.flatMap { m =>
           try {
@@ -527,7 +557,11 @@ object Media {
     * structurally miss. */
   def phash(content: Array[Byte]): Long = {
     val (img, px) = decodeRgb(content)
-    val (w, h) = (img.getWidth, img.getHeight)
+    phashPixels(img.getWidth, img.getHeight, px)
+  }
+
+  /** [[phash]] over decoded sRGB pixels (`w`×`h`, row order). */
+  private[pipeline] def phashPixels(w: Int, h: Int, px: Array[Int]): Long = {
     val g = PhashGrid
     // Exact box-average: each source pixel lands in one grid cell.
     val sums = new Array[Long](g * g)

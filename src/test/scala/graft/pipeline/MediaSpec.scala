@@ -140,6 +140,28 @@ class MediaSpec extends AnyFunSuite with SparkSpec with Matchers {
     feats("c.wav").features shouldBe featureStub("fake-audio".getBytes)
   }
 
+  test("image decode never goes through ImageIO's file cache: with the " +
+      "cache on and its directory deleted, a valid PNG still decodes") {
+    val png = realPngBytes()
+    val (features, meta, hash) = (imageFeatures(png), decodeImage(png), phash(png))
+    val dir = Files.createTempDirectory("imageio_cache_")
+    try {
+      javax.imageio.ImageIO.setUseCache(true)
+      javax.imageio.ImageIO.setCacheDirectory(dir.toFile)
+      // What a tmp cleaner does to a long-lived executor's java.io.tmpdir.
+      Files.delete(dir)
+      imageFeatures(png) shouldBe features
+      features(0) shouldBe 0.5f
+      features(FeatureDim - 1) shouldBe 0.5f
+      decodeImage(png) shouldBe meta
+      meta shouldBe ImageMeta(4, 2, 3, 127.5)
+      phash(png) shouldBe hash
+    } finally {
+      javax.imageio.ImageIO.setCacheDirectory(null)
+      javax.imageio.ImageIO.setUseCache(true)
+    }
+  }
+
   test("audioFeatures: REAL energy envelope — silence then a constant " +
       "half-amplitude block puts all mass in the top 8 segments") {
     val samples = Array.tabulate[Short](1600)(i =>
