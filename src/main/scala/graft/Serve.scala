@@ -59,9 +59,11 @@ import org.apache.spark.sql.functions._
   * REQUEST paths ([[graft.operators.Similarity.serveIvfRequest]] /
   * [[graft.operators.Similarity.serveFusedRequest]]): driver-memoized
   * panels + statically-filtered memoized indexes, row-identical to the
-  * panel queries (ServeSpec). Whole-CLI single-request p50 is 0.31 s
-  * on the perfbench `serve` workload (warm sf0.1 tables, one id per
-  * request, 80 % fused / 20 % ivf at 1.5 requests/s, 4 vCPUs).
+  * panel queries (ServeSpec), each request ONE Spark job (one stage, no
+  * exchange: per-partition top-k heaps gathered on the driver).
+  * Whole-CLI single-request p50 is 0.23 s on the perfbench `serve`
+  * workload (warm sf0.1 tables, one id per request, 80 % fused / 20 %
+  * ivf at 1.5 requests/s, 4 vCPUs).
   */
 object Serve {
 
@@ -157,11 +159,11 @@ object Serve {
     // vectors (and, for fused, its query terms + corpus stats) off a
     // driver-memoized panel and probes a memoized index behind a
     // static filter — row-identical to the panel query filtered to the
-    // ids (ServeSpec pins both), but per-request cost is a probe, not
-    // a corpus-index rebuild. ivf scans nprobe cells; fused (the CLI
-    // DEFAULT) runs one cached-corpus cosine pass + a term-sharded
-    // postings probe. Other retrievers (and panel serves) keep the
-    // query-plan path.
+    // ids (ServeSpec pins both), but per-request cost is one Spark job
+    // over a probe, not a corpus-index rebuild. ivf scans nprobe cells;
+    // fused (the CLI DEFAULT) runs one cached-corpus cosine pass + a
+    // term-sharded postings probe. Other retrievers (and panel serves)
+    // keep the query-plan path.
     val picked = (cfg.retriever, queryIds) match {
       case ("ivf", Some(ids)) =>
         graft.operators.Similarity.serveIvfRequest(spark, cfg.sfDir, ids)

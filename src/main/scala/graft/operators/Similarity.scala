@@ -1071,18 +1071,17 @@ object Similarity {
         .repartition(IvfCells, col("cell"))
     }
 
-  /** Driver-memoized query panel (the ≤[[NQueries]] servable query
-    * vectors with their index cells): collected ONCE per (session,
-    * dir), so a request resolves its query vector and probe cells
-    * without any Spark job. */
+  /** Driver-memoized query panel (the ≤[[NQueries]] servable queries as
+    * `(q_id, qv, qn2, qcell)`: scaled vector, exact squared norm, index
+    * cell): collected ONCE per (session, dir), so a request resolves its
+    * query vector and probe cells without any Spark job. */
   private def ivfQueryPanel(spark: SparkSession, dir: String)
-      : (org.apache.spark.sql.types.StructType,
-         Seq[org.apache.spark.sql.Row]) =
+      : Seq[(Long, Seq[Long], Long, Int)] =
     Features.cachedValue(spark, s"$dir#ivfQueryPanel") {
-      val df = ivfAssigned(spark, dir).filter(col("vec_id") < NQueries)
-        .select(col("vec_id").as("q_id"), col("sv").as("qv"),
-          col("n2").as("qn2"), col("cell").as("qcell"))
-      (df.schema, df.collect().toSeq)
+      ivfAssigned(spark, dir).filter(col("vec_id") < NQueries)
+        .select(col("vec_id"), col("sv"), col("n2"), col("cell"))
+        .collect().toSeq
+        .map(r => (r.getLong(0), r.getSeq[Long](1), r.getLong(2), r.getInt(3)))
     }
 
   /** The servable query-id panel (the ids a `--queries`-less request
@@ -1090,55 +1089,110 @@ object Similarity {
     * no job. */
   private[graft] def servableQueryIds(spark: SparkSession,
       dir: String): Seq[Long] =
-    ivfQueryPanel(spark, dir)._2.map(_.getLong(0))
+    ivfQueryPanel(spark, dir).map(_._1)
+
+  /** The request's queries as ONE plan literal, exploded on the corpus
+    * side into a struct column `q` (`q._1` = q_id, `q._2` = qv, `q._3` =
+    * qn2; for the IVF panel `q._4` = cell). An array literal is passed
+    * to the generated code by reference, so the compiled classes do not
+    * depend on which ids were asked for; per-id `lit(qId)` / `lit(qn2)`
+    * scalars would be inlined into the generated code and compile new
+    * classes per id. */
+  private def explodeQueries[Q <: Product: scala.reflect.runtime.universe.TypeTag](
+      qs: Seq[Q]): Column =
+    explode(typedLit(qs)).as("q")
+
+  /** The IVF semantic leg shared by [[serveIvfRequest]] and
+    * [[serveFusedAnnRequest]]: [[ivfServeIndex]] behind a STATIC `cell
+    * isin (probe cells)` filter (batch-pruned cached scan, not a corpus
+    * stream), each candidate paired with the requested queries of its
+    * own cell, scored with q44's exact cosine; (leg=0, q_id, id,
+    * score) for [[requestTopK]]. */
+  private def ivfLegScored(spark: SparkSession, dir: String,
+      hit: Seq[(Long, Seq[Long], Long, Int)]): DataFrame =
+    ivfServeIndex(spark, dir)
+      .filter(col("cell").isin(hit.map(_._4).distinct: _*))
+      .select(col("vec_id"), col("sv"), col("n2"), col("cell"),
+        explodeQueries(hit))
+      .filter(col("cell") === col("q._4"))
+      .select(semScore: _*)
+
+  /** A semantic leg's (leg=0, q_id, id, score) over candidates `(vec_id,
+    * sv, n2)` paired with an exploded query `q`: the batch plans' exact
+    * cosine. */
+  private def semScore: Seq[Column] = Seq(lit(0L).as("leg"),
+    col("q._1").as("q_id"), col("vec_id").as("id"),
+    cosine(dotL(col("sv"), col("q._2")), col("n2"), col("q._3")).as("score"))
+
+  /** Top-k per `(leg, q_id)` of a request's scored candidates `(leg,
+    * q_id, id, score)` as ONE scatter–gather job: each partition keeps
+    * its k best rows per group in a [[graft.functions.TopK.Buf]], and the
+    * driver merges the partitions' rows through the same buffer. Best
+    * first, as `(id, score)`.
+    *
+    * The buffer orders by the interpreted ordering of `struct(score,
+    * −id)`, the ordering `graft_topk` uses, so ties, NaN and −0.0 rank
+    * exactly as in the batch plans' `(score DESC, id ASC)` windows.
+    * Per-partition top-k is exact only when each candidate's score is
+    * complete within its partition: true for the cosine legs (one row
+    * per candidate) and for the lexical leg (its per-(q_id, doc_id) sum
+    * runs over postings hash-partitioned by doc_id).
+    *
+    * `mapPartitions(...).collect()` is a tracked SQL execution, so
+    * listeners and `spark.driver.maxResultSize` apply. The driver
+    * receives at most partitions × |ids| × legs × k rows, the bound a
+    * shuffle into a `groupBy(leg, q_id).agg(graft_topk)` would carry —
+    * without the shuffle round, the broadcast jobs or the AQE re-plan. */
+  private def requestTopK(scored: DataFrame, k: Int)
+      : Map[(Long, Long), Seq[(Long, Double)]] = {
+    import org.apache.spark.sql.Encoders
+    import org.apache.spark.sql.types.{StructField, StructType}
+    type Cand = (Long, Long, Long, Double)
+    val enc = Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong,
+      Encoders.scalaLong, Encoders.scalaDouble)
+    val ordType = StructType(Seq(StructField("score", DoubleType),
+      StructField("neg_id", LongType)))
+    val keep: Iterator[Cand] => Iterator[Cand] = rows => {
+      val ordering = org.apache.spark.sql.catalyst.util.TypeUtils
+        .getInterpretedOrdering(ordType)
+      val bufs = scala.collection.mutable.LinkedHashMap
+        .empty[(Long, Long), graft.functions.TopK.Buf]
+      rows.foreach { c =>
+        val o = org.apache.spark.sql.catalyst.InternalRow(c._4, -c._3)
+        val b = bufs.getOrElseUpdate((c._1, c._2),
+          new graft.functions.TopK.Buf(ordering))
+        if (b.admits(o, k)) b.offer(o, c, k)
+      }
+      bufs.valuesIterator.flatMap(_.sortedValuesDesc.iterator.map(_.asInstanceOf[Cand]))
+    }
+    keep(scored.as(enc).mapPartitions(keep)(enc).collect().iterator).toSeq
+      .groupBy(c => (c._1, c._2))
+      .map { case (g, cs) => g -> cs.map(c => (c._3, c._4)) }
+  }
 
   /** PER-REQUEST IVF retrieval — row-identical to q44 filtered to
-    * `ids`, but shaped like a SERVE call instead of a panel rebuild:
-    * the query vectors come off the driver-memoized [[ivfQueryPanel]]
-    * (no job), the candidate side is [[ivfServeIndex]] with a STATIC
-    * `cell isin (probe cells)` filter (batch-pruned cached scan, not a
-    * corpus stream), and the top-k heap runs over one cell's
-    * candidates per query.
+    * `ids`, shaped like a SERVE call instead of a panel rebuild: the
+    * query vectors come off the driver-memoized [[ivfQueryPanel]] (no
+    * job) and enter the plan as one literal ([[explodeQueries]]); the
+    * candidate side is [[ivfLegScored]]'s cell-pruned index scan; the
+    * top-k is [[requestTopK]]'s per-partition heaps gathered on the
+    * driver. One Spark job, one stage, no exchange.
     *
-    * EAGER, like [[serveFusedRequest]]: the one action collects the
-    * heap-collapsed rows (≤ k per requested id) and the `(q_id, rank)`
-    * order is applied on the driver, so the result is a local frame. A
-    * plan-side `orderBy` would range-partition those few rows — a
-    * sampling job plus an exchange per request, and both again for
-    * every action on the returned frame. `ServeSpec` pins the row
-    * identity and the exchange-free plan; the ScaleBench `serveconc`
-    * phase measures the throughput this + FAIR request pools buys at
-    * 8/16/32 concurrent drivers. */
+    * EAGER: the result is a local frame ordered by `(q_id, rank)` on
+    * the driver (rank = heap position + 1; `cell` is the query's own,
+    * which every kept candidate shares). `ServeSpec` pins the row
+    * identity, the one job and the exchange-free plan; the ScaleBench
+    * `serveconc` phase measures the throughput this + FAIR request
+    * pools buys at 8/16/32 concurrent drivers. */
   def serveIvfRequest(spark: SparkSession, dir: String, ids: Seq[Long],
       k: Int = 5): DataFrame = {
-    val (schema, rows) = ivfQueryPanel(spark, dir)
-    val hit = rows.filter(r => ids.contains(r.getLong(0)))
-    val cells: Seq[Any] = hit.map(_.get(3)).distinct
-    import scala.jdk.CollectionConverters._
-    val qs = spark.createDataFrame(hit.asJava, schema)
-    // Top-k via the graft_topk bounded heap, NOT a rank window: the
-    // window shuffled AND sorted the whole probe cell per request
-    // (~corpus/K rows — measured p50 3.1 s at the 2M-vector corpus,
-    // most of it the 200k-row sort), while the heap collapses each
-    // q_id to k rows MAP-SIDE. Identical keep-set and order:
-    // struct(cos, −vec_id) ≡ the window's (cos DESC, vec_id ASC), and
-    // the heap array is emitted best-first so position+1 IS the rank
-    // (ServeSpec pins row identity with q44).
-    val top = ivfServeIndex(spark, dir)
-      .filter(col("cell").isin(cells: _*))
-      .join(broadcast(qs), col("cell") === col("qcell"))
-      .withColumn("cos",
-        cosine(dotL(col("sv"), col("qv")), col("n2"), col("qn2")))
-      .groupBy(col("q_id"))
-      .agg(graft.functions.TopKAgg.topK(
-        struct(col("cos"), negate(col("vec_id"))),
-        struct(col("vec_id"), col("cell"), col("cos")), k).as("top"))
-      .select(col("q_id"), posexplode(col("top")).as(Seq("pos", "p")))
-      .select(col("q_id"), col("p.vec_id").as("vec_id"),
-        col("p.cell").as("cell"), col("p.cos").as("cos"),
-        (col("pos") + 1).cast("int").as("rank"))
-    val ordered = top.collect().sortBy(r => (r.getLong(0), r.getInt(4)))
-    spark.createDataFrame(ordered.toSeq.asJava, top.schema)
+    val hit = ivfQueryPanel(spark, dir).filter(q => ids.contains(q._1))
+    val tops = requestTopK(ivfLegScored(spark, dir, hit), k)
+    spark.createDataFrame(hit.sortBy(_._1).flatMap { case (qId, _, _, cell) =>
+      tops.getOrElse((0L, qId), Nil).zipWithIndex.map { case ((id, cos), pos) =>
+        (qId, id, cell, cos, pos + 1)
+      }
+    }).toDF("q_id", "vec_id", "cell", "cos", "rank")
   }
 
   // ---------------------------------------------- fused serving path
@@ -1203,24 +1257,21 @@ object Similarity {
         .sortWithinPartitions(col("w"))
     }
 
-  /** Driver-memoized panel for fused requests: the servable query
-    * vectors, each query's 3 globally-rarest terms WITH their global
-    * document frequencies (so per-request BM25 needs no df job), and
-    * the two corpus constants (N, Σdl). Collected ONCE per (session,
-    * dir) — the [[ivfQueryPanel]] posture for the hybrid retriever. */
-  private final case class FusedPanel(
-      qSchema: org.apache.spark.sql.types.StructType,
-      qRows: Seq[org.apache.spark.sql.Row],
-      tSchema: org.apache.spark.sql.types.StructType,
-      tRows: Seq[org.apache.spark.sql.Row],
+  /** Driver-memoized panel for fused requests: the servable queries as
+    * `(q_id, qv, qn2)`, each query's 3 globally-rarest terms as `(q_id,
+    * w)`, and the two corpus constants (N, Σdl) the postings index is
+    * scored with. Collected ONCE per (session, dir) — the
+    * [[ivfQueryPanel]] posture for the hybrid retriever. */
+  private[graft] final case class FusedPanel(
+      queries: Seq[(Long, Seq[Long], Long)],
+      terms: Seq[(Long, String)],
       nDocs: Long, sumDl: Long)
 
-  private def fusedServePanel(spark: SparkSession, dir: String): FusedPanel =
+  private[graft] def fusedServePanel(spark: SparkSession, dir: String): FusedPanel =
     Features.cachedValue(spark, s"$dir#fusedServePanel") {
       val docs = Tables.documents(spark, dir)
       val qs = scaledEmb(spark, dir).filter(col("vec_id") < NQueries)
-        .select(col("vec_id").as("q_id"), col("sv").as("qv"),
-          col("n2").as("qn2"))
+        .select(col("vec_id"), col("sv"), col("n2"))
       val tf = Features.docTokenCounts(spark, dir)
       val dfAll = tf.groupBy(col("w")).agg(count(lit(1)).as("df"))
       val wQ = Window.partitionBy(col("q_id")).orderBy(col("df"), col("w"))
@@ -1229,83 +1280,72 @@ object Similarity {
         .select(col("doc_id").as("q_id"), col("w"), col("df"))
         .withColumn("tr", row_number().over(wQ))
         .filter(col("tr") <= 3)
-        .select(col("q_id"), col("w"), col("df"))
+        .select(col("q_id"), col("w"))
       val st = docs.agg(count(lit(1)).as("n_docs"),
         sum(size(tokens(col("text"))).cast("long")).as("sum_dl"))
         .collect().head
-      FusedPanel(qs.schema, qs.collect().toSeq, qt.schema, qt.collect().toSeq,
+      FusedPanel(
+        qs.collect().toSeq.map(r => (r.getLong(0), r.getSeq[Long](1), r.getLong(2))),
+        qt.collect().toSeq.map(r => (r.getLong(0), r.getString(1))),
         st.getLong(0), st.getLong(1))
     }
 
   /** PER-REQUEST fused (RRF) retrieval — row-identical to q144
-    * filtered to `ids` (`ServeSpec` pins it), shaped like a SERVE call
-    * (round-15 verdict task 1, the one `weak` grade):
+    * filtered to `ids` (`ServeSpec` pins it), shaped like a SERVE call:
     *
-    *  - query vectors, query terms+df, and corpus stats come off the
+    *  - query vectors, query terms and corpus stats come off the
     *    driver-memoized [[fusedServePanel]] — no job, no df rebuild;
-    *  - the semantic leg is one cached-corpus scan against the ≤|ids|
-    *    broadcast query panel, its top-10 collapsed MAP-SIDE by the
-    *    [[graft.functions.TopKAgg]] heap (the batch plan's
-    *    corpus-wide `row_number` window shuffle+sort was the p50
-    *    tail);
-    *  - the lexical leg probes [[fusedServePostings]] behind a static
-    *    `w isin (…)` filter (batch-pruned term-sharded scan), scores
-    *    q86's exact micro-unit BM25 from panel constants, and heap-
-    *    collapses its top-10 the same way;
-    *  - fusion is q144's exact integer RRF over ≤20 candidates/query.
+    *  - the semantic leg is one cached-corpus scan with the requested
+    *    queries exploded from one plan literal ([[explodeQueries]]), no
+    *    broadcast query frame and no per-id scalar literal;
+    *  - the lexical leg ([[lexLegScored]]) probes [[fusedServePostings]]
+    *    behind a static `w isin (…)` filter and sums q86's exact
+    *    micro-unit BM25 per (q_id, doc_id) without an exchange;
+    *  - both legs are scored in ONE Spark job, one stage: their union
+    *    feeds [[requestTopK]]'s per-partition top-10 heaps, gathered on
+    *    the driver (at most partitions × |ids| × 2 × 10 rows). No
+    *    shuffle, no broadcast job, no AQE re-plan: at the benchmark's
+    *    warm sf0.1 request these round trips, not the scan, were the
+    *    latency;
+    *  - fusion is q144's exact integer RRF over ≤20 candidates/query
+    *    ([[fuseDriverSide]]).
     *
     * Identity argument: both legs compute the IDENTICAL score
     * expressions (same doubles, same floors) over the same inputs, and
     * the heap's `struct(score, -id)` ordering is exactly the window's
     * `(score DESC, id ASC)`; ranks therefore agree rank-for-rank, and
-    * the fusion tail is q144's own code. */
+    * the fusion tail is q144's own code. The lex score rides as a double
+    * for the shared schema, which is exact: BM25 micro-unit sums are
+    * ≤ ~10⁸ ≪ 2⁵³, so the double compares identically to the int64. */
   def serveFusedRequest(spark: SparkSession, dir: String, ids: Seq[Long],
       k: Int = 5): DataFrame = {
-    import scala.jdk.CollectionConverters._
-    val p = fusedServePanel(spark, dir)
-    val hitQ = p.qRows.filter(r => ids.contains(r.getLong(0)))
-    val qs = spark.createDataFrame(hitQ.asJava, p.qSchema)
-
-    // Both legs in ONE job (one action, one collect): each branch ends
-    // at a per-(leg, q_id) graft_topk heap whose ordering key is
-    // struct(score, −id) — the window's (score DESC, id ASC). The lex
-    // score rides as a double for the shared schema, which is exact:
-    // BM25 micro-unit sums are ≤ ~10⁸ ≪ 2⁵³, so the double compares
-    // identically to the int64 (and ties still break on −id). Under
-    // concurrent serving this halves the scheduler round-trips per
-    // request — the two branches are sibling stages of one job and
-    // interleave within the request's own FAIR pool.
+    val hit = fusedServePanel(spark, dir).queries
+      .filter(q => ids.contains(q._1))
     val semScored = fusedServeCorpus(spark, dir)
-      .crossJoin(broadcast(qs))
-      .select(lit(0L).as("leg"), col("q_id"),
-        col("vec_id").as("id"),
-        cosine(dotL(col("sv"), col("qv")), col("n2"), col("qn2"))
-          .as("score"))
-    val legTops = semScored.unionByName(lexLegScored(spark, dir, ids))
-      .groupBy(col("leg"), col("q_id"))
-      .agg(graft.functions.TopKAgg.topK(
-        struct(col("score"), negate(col("id"))), col("id"), 10).as("top"))
-      .collect()
-
-    fuseDriverSide(spark, legTops, k)
+      .select(col("vec_id"), col("sv"), col("n2"), explodeQueries(hit))
+      .select(semScore: _*)
+    fuseDriverSide(spark,
+      requestTopK(semScored.unionByName(lexLegScored(spark, dir, ids)), 10), k)
   }
 
   /** The fused request's LEXICAL leg (shared by the exact and ANN
     * variants): a static term-pruned probe of the pre-scored postings
-    * index, panel terms broadcast, heap-ready (leg=1, q_id, id,
-    * score). */
+    * index (the `w isin (…)` prune is what cached-batch min/max stats
+    * skip on), each posting fanned out to the requested queries that
+    * carry its term through one map literal `w → [q_id]`. The postings'
+    * doc_id hash partitioning survives the explode, so the per-(q_id,
+    * doc_id) sum needs no exchange; (leg=1, q_id, id, score). */
   private def lexLegScored(spark: SparkSession, dir: String,
       ids: Seq[Long]): DataFrame = {
-    import scala.jdk.CollectionConverters._
-    val p = fusedServePanel(spark, dir)
-    val hitT = p.tRows.filter(r => ids.contains(r.getLong(0)))
-    val qt = spark.createDataFrame(hitT.asJava, p.tSchema)
-    val termList: Seq[String] = hitT.map(_.getString(1)).distinct
+    val byTerm: Map[String, Seq[Long]] = fusedServePanel(spark, dir).terms
+      .filter(t => ids.contains(t._1))
+      .groupBy(_._2).map { case (w, qs) => w -> qs.map(_._1) }
     val termFilter =
-      if (termList.isEmpty) lit(false) else col("w").isin(termList: _*)
+      if (byTerm.isEmpty) lit(false) else col("w").isin(byTerm.keys.toSeq: _*)
     fusedServePostings(spark, dir)
       .filter(termFilter)
-      .join(broadcast(qt.select(col("q_id"), col("w"))), "w")
+      .select(col("doc_id"), col("c_u"),
+        explode(element_at(typedLit(byTerm), col("w"))).as("q_id"))
       .groupBy(col("q_id"), col("doc_id"))
       .agg(sum(col("c_u")).as("score_u"))
       .select(lit(1L).as("leg"), col("q_id"), col("doc_id").as("id"),
@@ -1314,20 +1354,18 @@ object Similarity {
 
   /** Fusion runs DRIVER-SIDE (shared by the exact and ANN fused
     * requests): each leg has already heap-collapsed to ≤10 ids per
-    * requested query (best first — rank = array position), so the
+    * requested query (best first — rank = position + 1), so the
     * batch plan's full_outer join + rank window would spend two more
     * exchange barriers fusing ≤20 integers. The exact integer RRF
     * ⌊10⁶/(K+rank)⌋, the (rrf_u DESC, id ASC) top-k cut, and the
     * output order replicate q144's expressions verbatim on longs — no
     * float enters, so driver and executor arithmetic cannot differ. */
   private def fuseDriverSide(spark: SparkSession,
-      legTops: Array[org.apache.spark.sql.Row], k: Int): DataFrame = {
+      legTops: Map[(Long, Long), Seq[(Long, Double)]], k: Int): DataFrame = {
     import scala.jdk.CollectionConverters._
     def ranksOf(leg: Long): Map[(Long, Long), Long] =
-      legTops.filter(_.getLong(0) == leg).flatMap { r =>
-        r.getSeq[Long](2).zipWithIndex.map { case (id, pos) =>
-          (r.getLong(1), id) -> (pos + 1L)
-        }
+      legTops.toSeq.filter(_._1._1 == leg).flatMap { case ((_, qId), best) =>
+        best.zipWithIndex.map { case ((id, _), pos) => (qId, id) -> (pos + 1L) }
       }.toMap
     val semRows = ranksOf(0L)
     val lexRows = ranksOf(1L)
@@ -1362,19 +1400,18 @@ object Similarity {
   }
 
   /** PER-REQUEST fused retrieval with the INDEXED semantic leg — the
-    * corpus-scale fused serve (round-16 verdict task 3: the exact
-    * fused request's semantic leg is per-request corpus-LINEAR by
-    * q144-row-identity construction, so its p50 grows with the corpus
-    * decade; this variant swaps that one leg onto the q44 IVF index
-    * and keeps everything else byte-identical):
+    * corpus-scale fused serve (the exact fused request's semantic leg
+    * is per-request corpus-LINEAR by q144-row-identity construction, so
+    * its p50 grows with the corpus decade; this variant swaps that one
+    * leg onto the q44 IVF index and keeps everything else identical):
     *
-    *  - semantic candidates come from [[ivfServeIndex]] behind a
-    *    static `cell isin (probe cells)` filter (the [[serveIvfRequest]]
-    *    scan — cell-partition pruning, ~1/K of the corpus per request),
-    *    scored with the SAME exact cosine and heap-collapsed the same
-    *    way;
-    *  - the lexical leg and the driver-side integer RRF are the exact
-    *    variant's own code ([[lexLegScored]], [[fuseDriverSide]]);
+    *  - semantic candidates come from [[ivfLegScored]], the
+    *    [[serveIvfRequest]] scan (cell-partition pruning, ~1/K of the
+    *    corpus per request), scored with the SAME exact cosine;
+    *  - the lexical leg, the one-job top-10 gather and the driver-side
+    *    integer RRF are the exact variant's own code ([[lexLegScored]],
+    *    [[requestTopK]], [[fuseDriverSide]]): one Spark job, one stage,
+    *    at most partitions × |ids| × 2 × 10 rows to the driver;
     *  - recall vs the exact fused top-k is AUDITED, not assumed: the
     *    ScaleBench `serve` phase reports `fused_ann_recall` at each
     *    corpus size, and `FusedAnnSpec` pins the one-cell identity case
@@ -1387,24 +1424,9 @@ object Similarity {
     * this engine (q113/q136/q166). */
   def serveFusedAnnRequest(spark: SparkSession, dir: String, ids: Seq[Long],
       k: Int = 5): DataFrame = {
-    import scala.jdk.CollectionConverters._
-    val (schema, rows) = ivfQueryPanel(spark, dir)
-    val hit = rows.filter(r => ids.contains(r.getLong(0)))
-    val cells: Seq[Any] = hit.map(_.get(3)).distinct
-    val qs = spark.createDataFrame(hit.asJava, schema)
-    val semScored = ivfServeIndex(spark, dir)
-      .filter(col("cell").isin(cells: _*))
-      .join(broadcast(qs), col("cell") === col("qcell"))
-      .select(lit(0L).as("leg"), col("q_id"),
-        col("vec_id").as("id"),
-        cosine(dotL(col("sv"), col("qv")), col("n2"), col("qn2"))
-          .as("score"))
-    val legTops = semScored.unionByName(lexLegScored(spark, dir, ids))
-      .groupBy(col("leg"), col("q_id"))
-      .agg(graft.functions.TopKAgg.topK(
-        struct(col("score"), negate(col("id"))), col("id"), 10).as("top"))
-      .collect()
-    fuseDriverSide(spark, legTops, k)
+    val hit = ivfQueryPanel(spark, dir).filter(q => ids.contains(q._1))
+    fuseDriverSide(spark, requestTopK(ivfLegScored(spark, dir, hit)
+      .unionByName(lexLegScored(spark, dir, ids)), 10), k)
   }
 
   /** The `assigned` index-build CTE chain shared by q44 and q130 —

@@ -5,9 +5,14 @@ import java.nio.file.Files
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.{Exchange, ReusedExchangeExec}
 import org.apache.spark.sql.util.QueryExecutionListener
+import org.scalacheck.Gen
+import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
 
@@ -22,6 +27,22 @@ import graft.operators.Similarity
 class ServeSpec extends AnyFunSuite with SparkSpec with Matchers {
 
   private val sfDir = SparkSpec.Sf0001
+
+  /** Id lists a request can carry, over the servable panel: the empty
+    * list, all of it, and sampled subsets with duplicated and unknown ids
+    * mixed in, shuffled. Seeded, so every run checks the same lists. */
+  private def requestIdLists(panel: Seq[Long]): Seq[Seq[Long]] = {
+    val unknown = Seq(999999L, panel.max + 1, -1L)
+    val gen = for {
+      sub <- Gen.someOf(panel)
+      dups <- Gen.someOf(sub)
+      bad <- Gen.someOf(unknown)
+      order <- Gen.long
+    } yield new scala.util.Random(order).shuffle((sub ++ dups ++ bad).toSeq)
+    Seq(Seq.empty[Long], panel) ++ (0 until 12).flatMap { i =>
+      gen.apply(Gen.Parameters.default, Seed(i.toLong)).toSeq
+    }
+  }
 
   private def fusedRows(dir: String): Set[(Long, Long, Long, Long, Long)] =
     spark.read.json(s"$dir/results")
@@ -95,6 +116,18 @@ class ServeSpec extends AnyFunSuite with SparkSpec with Matchers {
     got.map(_._1) shouldBe Set(2L, 5L)
     got shouldBe rows(SparkEntry.queries("q44_ivf_ann")(spark, sfDir)
       .filter(org.apache.spark.sql.functions.col("q_id").isin(2L, 5L)))
+
+    // Generated id lists, called on the request path directly: every
+    // column (cos to the bit) and the schema, rows in q44's order.
+    val q44 = SparkEntry.queries("q44_ivf_ann")(spark, sfDir)
+    val q44Rows = q44.collect().toSeq
+    for (ids <- requestIdLists(Similarity.servableQueryIds(spark, sfDir)))
+      withClue(s"ids $ids: ") {
+        val served = Similarity.serveIvfRequest(spark, sfDir, ids)
+        served.schema.simpleString shouldBe q44.schema.simpleString
+        served.collect().toSeq shouldBe
+          q44Rows.filter(r => ids.contains(r.getLong(0)))
+      }
   }
 
   test("the fused REQUEST path (id-bounded --queries on the DEFAULT " +
@@ -125,6 +158,21 @@ class ServeSpec extends AnyFunSuite with SparkSpec with Matchers {
     // an empty result ships an empty part file — read as text (json
     // schema inference can't see an all-empty dir)
     spark.read.text(s"$out2/results").count() shouldBe 0L
+
+    // Generated id lists, called on the request path directly, rows in
+    // q144's order. One of them must carry two ids that share a panel
+    // term, so one postings row feeds two q_ids of the lexical leg.
+    val q144Rows = SparkEntry.queries("q144_rrf_fusion")(spark, sfDir)
+      .collect().toSeq
+    val termOwners = Similarity.fusedServePanel(spark, sfDir).terms
+      .groupBy(_._2).values.map(_.map(_._1).toSet).filter(_.size > 1)
+    val lists = requestIdLists(Similarity.servableQueryIds(spark, sfDir))
+    lists.exists(ids => termOwners.exists(_.count(ids.contains) > 1)) shouldBe
+      true
+    for (ids <- lists) withClue(s"ids $ids: ") {
+      Similarity.serveFusedRequest(spark, sfDir, ids).collect().toSeq shouldBe
+        q144Rows.filter(r => ids.contains(r.getLong(0)))
+    }
   }
 
   test("every retriever serves its own oracled query's rows") {
@@ -263,30 +311,70 @@ class ServeSpec extends AnyFunSuite with SparkSpec with Matchers {
     executions shouldBe 1
   }
 
-  test("the ivf request is eager and exchange-free: its one execution " +
-      "heap-collapses per id and the (q_id, rank) order is applied on " +
-      "the driver, not by a range-partitioned sort") {
-    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new QueryExecutionListener {
+  /** Runs `request` once to warm its panels and cached indexes, then
+    * again counted: the rows, the Spark jobs started and the physical
+    * plans executed (as string, and every node, AQE stages included). */
+  private def requestShape(request: => DataFrame)
+      : (Seq[Row], Int, Seq[String], Seq[SparkPlan]) = {
+    request.collect()
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val qeListener = new QueryExecutionListener {
       override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
-        plans.add(qe.executedPlan.toString)
+        plans.add(qe.executedPlan)
       override def onFailure(f: String, qe: QueryExecution,
           e: Exception): Unit = ()
     }
-    Similarity.serveIvfRequest(spark, sfDir, Seq(2L)).collect() // warm
-    spark.listenerManager.register(listener)
+    val jobListener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    spark.listenerManager.register(qeListener)
+    spark.sparkContext.addSparkListener(jobListener)
     val rows = try {
-      val served = Similarity.serveIvfRequest(spark, sfDir, Seq(2L, 5L))
-      val r = served.collect()
+      val r = request.collect().toSeq
       SqlActionCounter.drainListenerBus(spark)
       r
-    } finally spark.listenerManager.unregister(listener)
-    rows.map(r => (r.getLong(0), r.getInt(4))).toSeq shouldBe
-      rows.map(r => (r.getLong(0), r.getInt(4))).toSeq.sorted
-    rows.map(_.getLong(0)).toSet shouldBe Set(2L, 5L)
+    } finally {
+      spark.listenerManager.unregister(qeListener)
+      spark.sparkContext.removeSparkListener(jobListener)
+    }
     val seen = plans.asScala.toSeq
-    seen should not be empty
-    seen.exists(_.contains("Exchange")) shouldBe true
-    all(seen.map(_.toLowerCase)) should not include "rangepartitioning"
+    object Nodes extends AdaptiveSparkPlanHelper
+    (rows, jobs.get, seen.map(_.toString), seen.flatMap(p => Nodes.collect(p) {
+      case n => n }))
+  }
+
+  private def exchanges(nodes: Seq[SparkPlan]): Seq[SparkPlan] =
+    nodes.filter(n => n.isInstanceOf[Exchange] || n.isInstanceOf[ReusedExchangeExec])
+
+  test("the ivf request is eager and exchange-free: its one execution " +
+      "heap-collapses per id and the (q_id, rank) order is applied on " +
+      "the driver, not by a range-partitioned sort") {
+    val (rows, jobs, plans, nodes) =
+      requestShape(Similarity.serveIvfRequest(spark, sfDir, Seq(5L, 2L)))
+    jobs shouldBe 1
+    plans should not be empty
+    exchanges(nodes) shouldBe empty
+    all(plans.map(_.toLowerCase)) should not include "rangepartitioning"
+    rows.map(r => (r.getLong(0), r.getInt(4))) shouldBe
+      rows.map(r => (r.getLong(0), r.getInt(4))).sorted
+    rows.map(_.getLong(0)).toSet shouldBe Set(2L, 5L)
+  }
+
+  test("the fused and fused-ann requests are ONE Spark job each with no " +
+      "exchange of any kind: both legs feed per-partition top-k heaps " +
+      "gathered on the driver") {
+    for ((name, request) <- Seq[(String, Seq[Long] => DataFrame)](
+        "fused" -> (ids => Similarity.serveFusedRequest(spark, sfDir, ids)),
+        "fused-ann" -> (ids => Similarity.serveFusedAnnRequest(spark, sfDir, ids))))
+      withClue(s"$name: ") {
+        val (rows, jobs, plans, nodes) = requestShape(request(Seq(6L, 1L, 3L)))
+        jobs shouldBe 1
+        plans should not be empty
+        exchanges(nodes) shouldBe empty
+        all(plans.map(_.toLowerCase)) should not include "rangepartitioning"
+        rows.map(_.getLong(0)).distinct shouldBe Seq(1L, 3L, 6L)
+      }
   }
 }
