@@ -58,10 +58,12 @@ import org.apache.spark.sql.functions._
   * (`--queries`) serves on `ivf` AND the default `fused` take the
   * REQUEST paths ([[graft.operators.Similarity.serveIvfRequest]] /
   * [[graft.operators.Similarity.serveFusedRequest]]): driver-memoized
-  * panels + statically-filtered memoized indexes, row-identical to the
-  * panel queries (ServeSpec), each request ONE Spark job (one stage, no
-  * exchange: per-partition top-k heaps gathered on the driver).
-  * Whole-CLI single-request p50 is 0.23 s on the perfbench `serve`
+  * panels + index shards pinned in executor storage
+  * ([[graft.operators.ServeShards]]), row-identical to the panel
+  * queries (ServeSpec); each request is ONE Spark job of one stage over
+  * only the shards it needs (per-shard top-k gathered on the driver),
+  * with no DataFrame plan built for it.
+  * Whole-CLI single-request p50 is 0.07 s on the perfbench `serve`
   * workload (warm sf0.1 tables, one id per request, 80 % fused / 20 %
   * ivf at 1.5 requests/s, 4 vCPUs).
   */
@@ -157,13 +159,14 @@ object Serve {
 
     // The REQUEST paths: an id-bounded retrieval resolves its query
     // vectors (and, for fused, its query terms + corpus stats) off a
-    // driver-memoized panel and probes a memoized index behind a
-    // static filter — row-identical to the panel query filtered to the
-    // ids (ServeSpec pins both), but per-request cost is one Spark job
-    // over a probe, not a corpus-index rebuild. ivf scans nprobe cells;
-    // fused (the CLI DEFAULT) runs one cached-corpus cosine pass + a
-    // term-sharded postings probe. Other retrievers (and panel serves)
-    // keep the query-plan path.
+    // driver-memoized panel and scores pinned index shards in one Spark
+    // job — row-identical to the panel query filtered to the ids
+    // (ServeSpec pins both), but per-request cost is one job over the
+    // shards it needs, not a query plan or a corpus-index rebuild. ivf
+    // runs on the shards holding its probed cells; fused (the CLI
+    // DEFAULT) scores every corpus shard's vectors and its postings of
+    // the query terms. Other retrievers (and panel serves) keep the
+    // query-plan path.
     val picked = (cfg.retriever, queryIds) match {
       case ("ivf", Some(ids)) =>
         graft.operators.Similarity.serveIvfRequest(spark, cfg.sfDir, ids)

@@ -566,6 +566,16 @@ object Features {
   // (session, key) scoping and [[clear]] lifecycle as the frame cache.
   private val valueCache = TrieMap[(String, String), AnyRef]()
 
+  /** A cached value that holds executor storage (the serve requests'
+    * persisted index shards): [[clear]], stale-stamp eviction and a lost
+    * build race release it, as they free a frame. */
+  trait Releasable { def release(): Unit }
+
+  private def releaseValue(v: AnyRef): Unit = v match {
+    case r: Releasable => try r.release() catch { case _: Exception => () }
+    case _ => ()
+  }
+
   /** Build-or-reuse a driver-side derived value (e.g. the corpus Bloom
     * sketches q72 probes): built once per (session, key), dropped by
     * [[clear]]. Production keeps such artifacts materialized next to
@@ -578,16 +588,18 @@ object Features {
     valueCache.get(k) match {
       case Some(v) => v.asInstanceOf[T]
       case None =>
-        // superseded stamps of the same logical key are plain values —
-        // drop them so a rewritten input can't serve stale constants
+        // drop superseded stamps of the same logical key (releasing any
+        // storage they hold) so a rewritten input can't serve stale values
         valueCache.keys
           .filter(o => o._1 == sk && o._2.startsWith(key + "|") && o._2 != stamped)
-          .foreach(valueCache.remove)
+          .foreach(o => valueCache.remove(o).foreach(releaseValue))
         noteBuild((sk, key))
         val built = build
         valueCache.putIfAbsent(k, built) match {
           case None         => built
-          case Some(winner) => winner.asInstanceOf[T]
+          case Some(winner) =>
+            releaseValue(built)
+            winner.asInstanceOf[T]
         }
     }
   }
@@ -683,7 +695,8 @@ object Features {
         // Dataset.unpersist would not release.
         try freeFrame(df) catch { case _: Exception => () })
     }
-    valueCache.keys.filter(_._1 == sk).foreach(valueCache.remove)
+    valueCache.keys.filter(_._1 == sk)
+      .foreach(k => valueCache.remove(k).foreach(releaseValue))
     buildCounts.keys.filter(_._1 == sk).foreach(buildCounts.remove)
     // Plan-memo entries reference frames the block above just freed —
     // a kept entry would silently recompute (correct but uncached) or
@@ -696,6 +709,7 @@ object Features {
   def clearAll(): Unit = {
     cache.values.foreach(df => try freeFrame(df) catch { case _: Exception => () })
     cache.clear()
+    valueCache.values.foreach(releaseValue)
     valueCache.clear()
     buildCounts.clear()
     planMemo.clear()

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.types.{DoubleType, LongType}
+import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType, StructField, StructType}
 
 import graft.Tables
 import graft.functions.TextFns.{tokens, tokensSql}
@@ -57,7 +57,7 @@ object Similarity {
     * [[graft.functions.LongDotProduct]] — the equivalent
     * `aggregate(zip_with(a,b,(x,y)=>x*y),…)` form allocates an
     * intermediate array per row and interprets its lambdas per element. */
-  private def dotL(a: Column, b: Column): Column =
+  private[operators] def dotL(a: Column, b: Column): Column =
     graft.functions.VectorExprs.dotL(a, b)
 
   private def dotLSql(a: String, b: String): String =
@@ -65,7 +65,7 @@ object Similarity {
 
   /** Deterministic cosine from exact integer dot/norms: one multiply, one
     * sqrt, one divide — all correctly-rounded IEEE doubles. */
-  private def cosine(dot: Column, n2a: Column, n2b: Column): Column =
+  private[operators] def cosine(dot: Column, n2a: Column, n2b: Column): Column =
     dot.cast(DoubleType) / sqrt(n2a.cast(DoubleType) * n2b.cast(DoubleType))
 
   private def cosineSql(dot: String, n2a: String, n2b: String): String =
@@ -1058,30 +1058,33 @@ object Similarity {
     ivfAnn(spark, dir)
 
   // ------------------------------------------------------- serving path
-  /** Cell-CLUSTERED served index: [[ivfAssigned]]'s candidate rows
-    * persisted in [[IvfCells]] partitions keyed by cell, so a request's
-    * static `cell isin (…)` filter skips whole cached batches via
-    * in-memory min/max stats instead of streaming the corpus — the
-    * "nprobe-sized scan" a serving deployment runs. Built once per
-    * (session, dir); at 100 TB this is the on-disk index layout
-    * (cell-partitioned files) and the filter is partition pruning. */
-  private def ivfServeIndex(spark: SparkSession, dir: String): DataFrame =
-    Features.cachedFrame(spark, s"$dir#ivfServeIndex") {
-      ivfAssigned(spark, dir).filter(col("vec_id") >= NQueries)
-        .repartition(IvfCells, col("cell"))
+  /** The IVF request index: [[ivfAssigned]]'s candidate rows as
+    * [[ServeShards]] shards in [[IvfCells]] partitions keyed by cell,
+    * so a request runs tasks only on the shards holding its probed
+    * cells (at 100 TB: cell-partitioned index files, one read per
+    * probed cell). Built once per (session, dir, input stamp, codebook
+    * mode). */
+  private[graft] def ivfShards(spark: SparkSession, dir: String)
+      : ServeShards.ShardSet =
+    Features.cachedValue(spark, s"$dir#ivfShards#${ivfCodebookMode(spark)}") {
+      ServeShards.ivfShards(spark, ivfAssigned(spark, dir)
+        .filter(col("vec_id") >= NQueries)
+        .select(col("vec_id"), col("sv"), col("n2"), col("cell"))
+        .repartition(IvfCells, col("cell")))
     }
 
-  /** Driver-memoized query panel (the ≤[[NQueries]] servable queries as
-    * `(q_id, qv, qn2, qcell)`: scaled vector, exact squared norm, index
-    * cell): collected ONCE per (session, dir), so a request resolves its
-    * query vector and probe cells without any Spark job. */
+  /** Driver-memoized query panel: the ≤[[NQueries]] servable queries
+    * with scaled vector, exact squared norm and index cell, collected
+    * ONCE per (session, dir, codebook mode), so a request resolves its
+    * query vectors and probe cells without any Spark job. */
   private def ivfQueryPanel(spark: SparkSession, dir: String)
-      : Seq[(Long, Seq[Long], Long, Int)] =
-    Features.cachedValue(spark, s"$dir#ivfQueryPanel") {
+      : Seq[ServeShards.Query] =
+    Features.cachedValue(spark, s"$dir#ivfQueryPanel#${ivfCodebookMode(spark)}") {
       ivfAssigned(spark, dir).filter(col("vec_id") < NQueries)
         .select(col("vec_id"), col("sv"), col("n2"), col("cell"))
         .collect().toSeq
-        .map(r => (r.getLong(0), r.getSeq[Long](1), r.getLong(2), r.getInt(3)))
+        .map(r => ServeShards.Query(r.getLong(0),
+          r.getSeq[Long](1).toArray, r.getLong(2), r.getInt(3)))
     }
 
   /** The servable query-id panel (the ids a `--queries`-less request
@@ -1089,181 +1092,100 @@ object Similarity {
     * no job. */
   private[graft] def servableQueryIds(spark: SparkSession,
       dir: String): Seq[Long] =
-    ivfQueryPanel(spark, dir).map(_._1)
+    ivfQueryPanel(spark, dir).map(_.qId)
 
-  /** The request's queries as ONE plan literal, exploded on the corpus
-    * side into a struct column `q` (`q._1` = q_id, `q._2` = qv, `q._3` =
-    * qn2; for the IVF panel `q._4` = cell). An array literal is passed
-    * to the generated code by reference, so the compiled classes do not
-    * depend on which ids were asked for; per-id `lit(qId)` / `lit(qn2)`
-    * scalars would be inlined into the generated code and compile new
-    * classes per id. */
-  private def explodeQueries[Q <: Product: scala.reflect.runtime.universe.TypeTag](
-      qs: Seq[Q]): Column =
-    explode(typedLit(qs)).as("q")
-
-  /** The IVF semantic leg shared by [[serveIvfRequest]] and
-    * [[serveFusedAnnRequest]]: [[ivfServeIndex]] behind a STATIC `cell
-    * isin (probe cells)` filter (batch-pruned cached scan, not a corpus
-    * stream), each candidate paired with the requested queries of its
-    * own cell, scored with q44's exact cosine; (leg=0, q_id, id,
-    * score) for [[requestTopK]]. */
-  private def ivfLegScored(spark: SparkSession, dir: String,
-      hit: Seq[(Long, Seq[Long], Long, Int)]): DataFrame =
-    ivfServeIndex(spark, dir)
-      .filter(col("cell").isin(hit.map(_._4).distinct: _*))
-      .select(col("vec_id"), col("sv"), col("n2"), col("cell"),
-        explodeQueries(hit))
-      .filter(col("cell") === col("q._4"))
-      .select(semScore: _*)
-
-  /** A semantic leg's (leg=0, q_id, id, score) over candidates `(vec_id,
-    * sv, n2)` paired with an exploded query `q`: the batch plans' exact
-    * cosine. */
-  private def semScore: Seq[Column] = Seq(lit(0L).as("leg"),
-    col("q._1").as("q_id"), col("vec_id").as("id"),
-    cosine(dotL(col("sv"), col("q._2")), col("n2"), col("q._3")).as("score"))
-
-  /** Top-k per `(leg, q_id)` of a request's scored candidates `(leg,
-    * q_id, id, score)` as ONE scatter–gather job: each partition keeps
-    * its k best rows per group in a [[graft.functions.TopK.Buf]], and the
-    * driver merges the partitions' rows through the same buffer. Best
-    * first, as `(id, score)`.
-    *
-    * The buffer orders by the interpreted ordering of `struct(score,
-    * −id)`, the ordering `graft_topk` uses, so ties, NaN and −0.0 rank
-    * exactly as in the batch plans' `(score DESC, id ASC)` windows.
-    * Per-partition top-k is exact only when each candidate's score is
-    * complete within its partition: true for the cosine legs (one row
-    * per candidate) and for the lexical leg (its per-(q_id, doc_id) sum
-    * runs over postings hash-partitioned by doc_id).
-    *
-    * `mapPartitions(...).collect()` is a tracked SQL execution, so
-    * listeners and `spark.driver.maxResultSize` apply. The driver
-    * receives at most partitions × |ids| × legs × k rows, the bound a
-    * shuffle into a `groupBy(leg, q_id).agg(graft_topk)` would carry —
-    * without the shuffle round, the broadcast jobs or the AQE re-plan. */
-  private def requestTopK(scored: DataFrame, k: Int)
-      : Map[(Long, Long), Seq[(Long, Double)]] = {
-    import org.apache.spark.sql.Encoders
-    import org.apache.spark.sql.types.{StructField, StructType}
-    type Cand = (Long, Long, Long, Double)
-    val enc = Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong,
-      Encoders.scalaLong, Encoders.scalaDouble)
-    val ordType = StructType(Seq(StructField("score", DoubleType),
-      StructField("neg_id", LongType)))
-    val keep: Iterator[Cand] => Iterator[Cand] = rows => {
-      val ordering = org.apache.spark.sql.catalyst.util.TypeUtils
-        .getInterpretedOrdering(ordType)
-      val bufs = scala.collection.mutable.LinkedHashMap
-        .empty[(Long, Long), graft.functions.TopK.Buf]
-      rows.foreach { c =>
-        val o = org.apache.spark.sql.catalyst.InternalRow(c._4, -c._3)
-        val b = bufs.getOrElseUpdate((c._1, c._2),
-          new graft.functions.TopK.Buf(ordering))
-        if (b.admits(o, k)) b.offer(o, c, k)
-      }
-      bufs.valuesIterator.flatMap(_.sortedValuesDesc.iterator.map(_.asInstanceOf[Cand]))
-    }
-    keep(scored.as(enc).mapPartitions(keep)(enc).collect().iterator).toSeq
-      .groupBy(c => (c._1, c._2))
-      .map { case (g, cs) => g -> cs.map(c => (c._3, c._4)) }
-  }
+  private val IvfRequestSchema = StructType(Seq(
+    StructField("q_id", LongType, nullable = false),
+    StructField("vec_id", LongType, nullable = false),
+    StructField("cell", IntegerType, nullable = false),
+    StructField("cos", DoubleType),
+    StructField("rank", IntegerType, nullable = false)))
 
   /** PER-REQUEST IVF retrieval — row-identical to q44 filtered to
-    * `ids`, shaped like a SERVE call instead of a panel rebuild: the
-    * query vectors come off the driver-memoized [[ivfQueryPanel]] (no
-    * job) and enter the plan as one literal ([[explodeQueries]]); the
-    * candidate side is [[ivfLegScored]]'s cell-pruned index scan; the
-    * top-k is [[requestTopK]]'s per-partition heaps gathered on the
-    * driver. One Spark job, one stage, no exchange.
+    * `ids`: the query vectors and cells come off the driver-memoized
+    * [[ivfQueryPanel]] (no job), and ONE Spark job runs only on the
+    * [[ivfShards]] holding the requested queries' cells, scoring each
+    * candidate against the queries of its own cell with q44's exact
+    * cosine and keeping the top k per query ([[ServeShards.gather]]).
+    * No DataFrame plan is built for the scan.
     *
     * EAGER: the result is a local frame ordered by `(q_id, rank)` on
     * the driver (rank = heap position + 1; `cell` is the query's own,
     * which every kept candidate shares). `ServeSpec` pins the row
-    * identity, the one job and the exchange-free plan; the ScaleBench
-    * `serveconc` phase measures the throughput this + FAIR request
-    * pools buys at 8/16/32 concurrent drivers. */
+    * identity and the job shape; the ScaleBench `serveconc` phase
+    * measures it under FAIR request pools at 8/16/32 concurrent
+    * drivers. */
   def serveIvfRequest(spark: SparkSession, dir: String, ids: Seq[Long],
       k: Int = 5): DataFrame = {
-    val hit = ivfQueryPanel(spark, dir).filter(q => ids.contains(q._1))
-    val tops = requestTopK(ivfLegScored(spark, dir, hit), k)
-    spark.createDataFrame(hit.sortBy(_._1).flatMap { case (qId, _, _, cell) =>
-      tops.getOrElse((0L, qId), Nil).zipWithIndex.map { case ((id, cos), pos) =>
-        (qId, id, cell, cos, pos + 1)
-      }
-    }).toDF("q_id", "vec_id", "cell", "cos", "rank")
+    import scala.jdk.CollectionConverters._
+    val hit = ivfQueryPanel(spark, dir).filter(q => ids.contains(q.qId))
+    val shards = ivfShards(spark, dir)
+    val tops = ServeShards.gather(spark, Seq(shards -> shards.holding(hit)),
+      hit, Map.empty, semOnIvf = true, k)
+    val rows = hit.sortBy(_.qId).flatMap { q =>
+      tops.getOrElse((ServeShards.SemLeg, q.qId), Nil).zipWithIndex
+        .map { case ((id, cos), pos) =>
+          org.apache.spark.sql.Row(q.qId, id, q.cell, cos, pos + 1) }
+    }
+    spark.createDataFrame(rows.asJava, IvfRequestSchema)
   }
 
   // ---------------------------------------------- fused serving path
-  /** Cached corpus side of the fused retriever's SEMANTIC leg (the
-    * [[NQueries]]+ rows with scaled vector + exact norm). The exact
-    * cosine scan IS q144's row-identity contract — the leg that swaps
-    * to the IVF index at 100 TB is the `ivf` retriever; `fused` keeps
-    * the exact ranking, so its request cost is one cached-columnar
-    * corpus pass (codegen'd int64 dot products), not a rebuild of the
-    * tokenize→tf→df pipeline the batch plan derives. */
-  private def fusedServeCorpus(spark: SparkSession, dir: String): DataFrame =
-    Features.cachedFrame(spark, s"$dir#fusedServeCorpus") {
-      scaledEmb(spark, dir).filter(col("vec_id") >= NQueries)
-        .select(col("vec_id"), col("sv"), col("n2"))
-    }
-
-  /** PRE-SCORED postings index for the fused retriever's LEXICAL leg:
-    * `(w, doc_id, c_u)` where `c_u` is q86's exact micro-unit BM25
+  /** PRE-SCORED postings for the fused retriever's LEXICAL leg: `(w,
+    * doc_id, c_u)` where `c_u` is q86's exact micro-unit BM25
     * contribution of term `w` to `doc_id` — fully computable at INDEX
     * time, because idf(df), avgdl and N are corpus constants and tf/dl
     * are per-posting (the expression is q144's verbatim, evaluated once
     * per posting instead of once per request; identical IEEE doubles,
-    * identical floor). Layout is the serving one:
-    *
-    *  - partitioned by `doc_id`, so the request's per-(query, doc)
-    *    score sum aggregates WITHOUT an exchange (hash(doc_id)
-    *    satisfies the groupBy's clustering — the matched-postings
-    *    shuffle was most of the request's latency on dense-vocabulary
-    *    corpora where "rare" terms still match half the corpus);
-    *  - sorted by `w` within partitions, so the static `w isin (…)`
-    *    filter prunes whole cached batches via min/max stats — the
-    *    in-memory analogue of a term-sharded inverted index (at
-    *    100 TB: postings files bucketed by doc, row-groups sorted by
-    *    term; the filter is row-group pruning).
-    *
-    * Built once per (session, dir). */
-  private def fusedServePostings(spark: SparkSession, dir: String): DataFrame =
-    Features.cachedFrame(spark, s"$dir#fusedServePostings") {
-      val docs = Tables.documents(spark, dir)
-      val p = fusedServePanel(spark, dir)
-      val k1 = TextAnalysis.Bm25K1; val b = TextAnalysis.Bm25B
-      val tfAll = Features.docTokenCounts(spark, dir)
-      val dfAll = tfAll.groupBy(col("w")).agg(count(lit(1)).as("df"))
-      val dls = docs.filter(col("doc_id") >= NQueries)
-        .select(col("doc_id"), size(tokens(col("text"))).cast("long").as("dl"))
-      tfAll.filter(col("doc_id") >= NQueries)
-        .join(dls, "doc_id")
-        .join(dfAll, "w")
-        .withColumn("idf",
-          log((lit(p.nDocs).cast(DoubleType) - col("df").cast(DoubleType)
-            + 0.5) / (col("df").cast(DoubleType) + 0.5) + 1.0))
-        .withColumn("avgdl",
-          lit(p.sumDl).cast(DoubleType) / lit(p.nDocs).cast(DoubleType))
-        .withColumn("c_u",
-          floor(lit(1000000.0) * col("idf") *
-            (col("tf").cast(DoubleType) * lit(k1 + 1.0)) /
-            (col("tf").cast(DoubleType) + lit(k1) * (lit(1.0 - b) +
-              lit(b) * col("dl").cast(DoubleType) / col("avgdl"))))
-            .cast("long"))
-        .select(col("w"), col("doc_id"), col("c_u"))
-        .repartition(col("doc_id"))
-        .sortWithinPartitions(col("w"))
+    * identical floor). */
+  private def fusedServePostings(spark: SparkSession, dir: String): DataFrame = {
+    val docs = Tables.documents(spark, dir)
+    val p = fusedServePanel(spark, dir)
+    val k1 = TextAnalysis.Bm25K1; val b = TextAnalysis.Bm25B
+    val tfAll = Features.docTokenCounts(spark, dir)
+    val dfAll = tfAll.groupBy(col("w")).agg(count(lit(1)).as("df"))
+    val dls = docs.filter(col("doc_id") >= NQueries)
+      .select(col("doc_id"), size(tokens(col("text"))).cast("long").as("dl"))
+    tfAll.filter(col("doc_id") >= NQueries)
+      .join(dls, "doc_id")
+      .join(dfAll, "w")
+      .withColumn("idf",
+        log((lit(p.nDocs).cast(DoubleType) - col("df").cast(DoubleType)
+          + 0.5) / (col("df").cast(DoubleType) + 0.5) + 1.0))
+      .withColumn("avgdl",
+        lit(p.sumDl).cast(DoubleType) / lit(p.nDocs).cast(DoubleType))
+      .withColumn("c_u",
+        floor(lit(1000000.0) * col("idf") *
+          (col("tf").cast(DoubleType) * lit(k1 + 1.0)) /
+          (col("tf").cast(DoubleType) + lit(k1) * (lit(1.0 - b) +
+            lit(b) * col("dl").cast(DoubleType) / col("avgdl"))))
+          .cast("long"))
+      .select(col("w"), col("doc_id"), col("c_u"))
+  }
+
+  /** The fused request index: the corpus vectors (vec_id ≥
+    * [[NQueries]], the exact cosine scan that IS q144's row-identity
+    * contract) and the [[fusedServePostings]], as [[ServeShards]] shards
+    * hash-partitioned by id, so a document's postings share one shard
+    * and its per-query BM25 sum completes there (at 100 TB: postings
+    * files bucketed by doc). Built once per (session, dir, input
+    * stamp). */
+  private def fusedShards(spark: SparkSession, dir: String)
+      : ServeShards.ShardSet =
+    Features.cachedValue(spark, s"$dir#fusedShards") {
+      ServeShards.corpusShards(spark,
+        scaledEmb(spark, dir).filter(col("vec_id") >= NQueries),
+        fusedServePostings(spark, dir))
     }
 
-  /** Driver-memoized panel for fused requests: the servable queries as
-    * `(q_id, qv, qn2)`, each query's 3 globally-rarest terms as `(q_id,
-    * w)`, and the two corpus constants (N, Σdl) the postings index is
-    * scored with. Collected ONCE per (session, dir) — the
-    * [[ivfQueryPanel]] posture for the hybrid retriever. */
+  /** Driver-memoized panel for fused requests: the servable queries
+    * (scaled vector and exact squared norm), each query's 3
+    * globally-rarest terms as `(q_id, w)`, and the two corpus constants
+    * (N, Σdl) the postings are scored with. Collected ONCE per
+    * (session, dir) — the [[ivfQueryPanel]] posture for the hybrid
+    * retriever. */
   private[graft] final case class FusedPanel(
-      queries: Seq[(Long, Seq[Long], Long)],
+      queries: Seq[ServeShards.Query],
       terms: Seq[(Long, String)],
       nDocs: Long, sumDl: Long)
 
@@ -1285,71 +1207,47 @@ object Similarity {
         sum(size(tokens(col("text"))).cast("long")).as("sum_dl"))
         .collect().head
       FusedPanel(
-        qs.collect().toSeq.map(r => (r.getLong(0), r.getSeq[Long](1), r.getLong(2))),
+        qs.collect().toSeq.map(r => ServeShards.Query(r.getLong(0),
+          r.getSeq[Long](1).toArray, r.getLong(2), cell = -1)),
         qt.collect().toSeq.map(r => (r.getLong(0), r.getString(1))),
         st.getLong(0), st.getLong(1))
     }
+
+  /** The lexical leg's input: each panel term of the requested queries
+    * mapped to the query ids that carry it. */
+  private def requestTerms(spark: SparkSession, dir: String,
+      ids: Seq[Long]): Map[String, Array[Long]] =
+    fusedServePanel(spark, dir).terms.filter(t => ids.contains(t._1))
+      .groupBy(_._2).map { case (w, qs) => w -> qs.map(_._1).toArray }
 
   /** PER-REQUEST fused (RRF) retrieval — row-identical to q144
     * filtered to `ids` (`ServeSpec` pins it), shaped like a SERVE call:
     *
     *  - query vectors, query terms and corpus stats come off the
     *    driver-memoized [[fusedServePanel]] — no job, no df rebuild;
-    *  - the semantic leg is one cached-corpus scan with the requested
-    *    queries exploded from one plan literal ([[explodeQueries]]), no
-    *    broadcast query frame and no per-id scalar literal;
-    *  - the lexical leg ([[lexLegScored]]) probes [[fusedServePostings]]
-    *    behind a static `w isin (…)` filter and sums q86's exact
-    *    micro-unit BM25 per (q_id, doc_id) without an exchange;
-    *  - both legs are scored in ONE Spark job, one stage: their union
-    *    feeds [[requestTopK]]'s per-partition top-10 heaps, gathered on
-    *    the driver (at most partitions × |ids| × 2 × 10 rows). No
-    *    shuffle, no broadcast job, no AQE re-plan: at the benchmark's
-    *    warm sf0.1 request these round trips, not the scan, were the
-    *    latency;
+    *  - ONE Spark job runs over every [[fusedShards]] shard: each task
+    *    scores its corpus vectors against the requested queries (the
+    *    semantic leg) and sums q86's exact micro-unit BM25 per (q_id,
+    *    doc_id) over the postings of the requested terms (the lexical
+    *    leg), and returns its top 10 per (leg, q_id); the driver merges
+    *    them ([[ServeShards.gather]]). No DataFrame plan, no shuffle, no
+    *    broadcast, no codegen per request;
     *  - fusion is q144's exact integer RRF over ≤20 candidates/query
     *    ([[fuseDriverSide]]).
     *
-    * Identity argument: both legs compute the IDENTICAL score
-    * expressions (same doubles, same floors) over the same inputs, and
-    * the heap's `struct(score, -id)` ordering is exactly the window's
+    * Identity argument: both legs compute the IDENTICAL scores (same
+    * doubles, same floors, same long sums) over the same inputs, and the
+    * heap's `struct(score, -id)` ordering is exactly the window's
     * `(score DESC, id ASC)`; ranks therefore agree rank-for-rank, and
     * the fusion tail is q144's own code. The lex score rides as a double
-    * for the shared schema, which is exact: BM25 micro-unit sums are
+    * for the shared heap, which is exact: BM25 micro-unit sums are
     * ≤ ~10⁸ ≪ 2⁵³, so the double compares identically to the int64. */
   def serveFusedRequest(spark: SparkSession, dir: String, ids: Seq[Long],
       k: Int = 5): DataFrame = {
-    val hit = fusedServePanel(spark, dir).queries
-      .filter(q => ids.contains(q._1))
-    val semScored = fusedServeCorpus(spark, dir)
-      .select(col("vec_id"), col("sv"), col("n2"), explodeQueries(hit))
-      .select(semScore: _*)
-    fuseDriverSide(spark,
-      requestTopK(semScored.unionByName(lexLegScored(spark, dir, ids)), 10), k)
-  }
-
-  /** The fused request's LEXICAL leg (shared by the exact and ANN
-    * variants): a static term-pruned probe of the pre-scored postings
-    * index (the `w isin (…)` prune is what cached-batch min/max stats
-    * skip on), each posting fanned out to the requested queries that
-    * carry its term through one map literal `w → [q_id]`. The postings'
-    * doc_id hash partitioning survives the explode, so the per-(q_id,
-    * doc_id) sum needs no exchange; (leg=1, q_id, id, score). */
-  private def lexLegScored(spark: SparkSession, dir: String,
-      ids: Seq[Long]): DataFrame = {
-    val byTerm: Map[String, Seq[Long]] = fusedServePanel(spark, dir).terms
-      .filter(t => ids.contains(t._1))
-      .groupBy(_._2).map { case (w, qs) => w -> qs.map(_._1) }
-    val termFilter =
-      if (byTerm.isEmpty) lit(false) else col("w").isin(byTerm.keys.toSeq: _*)
-    fusedServePostings(spark, dir)
-      .filter(termFilter)
-      .select(col("doc_id"), col("c_u"),
-        explode(element_at(typedLit(byTerm), col("w"))).as("q_id"))
-      .groupBy(col("q_id"), col("doc_id"))
-      .agg(sum(col("c_u")).as("score_u"))
-      .select(lit(1L).as("leg"), col("q_id"), col("doc_id").as("id"),
-        col("score_u").cast(DoubleType).as("score"))
+    val hit = fusedServePanel(spark, dir).queries.filter(q => ids.contains(q.qId))
+    val shards = fusedShards(spark, dir)
+    fuseDriverSide(spark, ServeShards.gather(spark, Seq(shards -> shards.all),
+      hit, requestTerms(spark, dir, ids), semOnIvf = false, 10), k)
   }
 
   /** Fusion runs DRIVER-SIDE (shared by the exact and ANN fused
@@ -1361,7 +1259,7 @@ object Similarity {
     * output order replicate q144's expressions verbatim on longs — no
     * float enters, so driver and executor arithmetic cannot differ. */
   private def fuseDriverSide(spark: SparkSession,
-      legTops: Map[(Long, Long), Seq[(Long, Double)]], k: Int): DataFrame = {
+      legTops: Map[(Long, Long), Seq[(Long, java.lang.Double)]], k: Int): DataFrame = {
     import scala.jdk.CollectionConverters._
     def ranksOf(leg: Long): Map[(Long, Long), Long] =
       legTops.toSeq.filter(_._1._1 == leg).flatMap { case ((_, qId), best) =>
@@ -1405,13 +1303,13 @@ object Similarity {
     * its p50 grows with the corpus decade; this variant swaps that one
     * leg onto the q44 IVF index and keeps everything else identical):
     *
-    *  - semantic candidates come from [[ivfLegScored]], the
-    *    [[serveIvfRequest]] scan (cell-partition pruning, ~1/K of the
-    *    corpus per request), scored with the SAME exact cosine;
-    *  - the lexical leg, the one-job top-10 gather and the driver-side
-    *    integer RRF are the exact variant's own code ([[lexLegScored]],
-    *    [[requestTopK]], [[fuseDriverSide]]): one Spark job, one stage,
-    *    at most partitions × |ids| × 2 × 10 rows to the driver;
+    *  - the ONE job runs on the [[ivfShards]] holding the requested
+    *    queries' cells (the [[serveIvfRequest]] probe, ~1/K of the
+    *    corpus per request), scored with the SAME exact cosine, and on
+    *    every [[fusedShards]] shard for the lexical leg only (their
+    *    corpus vectors are not read);
+    *  - the top-10 gather and the driver-side integer RRF are the exact
+    *    variant's own code ([[ServeShards.gather]], [[fuseDriverSide]]);
     *  - recall vs the exact fused top-k is AUDITED, not assumed: the
     *    ScaleBench `serve` phase reports `fused_ann_recall` at each
     *    corpus size, and `FusedAnnSpec` pins the one-cell identity case
@@ -1424,9 +1322,13 @@ object Similarity {
     * this engine (q113/q136/q166). */
   def serveFusedAnnRequest(spark: SparkSession, dir: String, ids: Seq[Long],
       k: Int = 5): DataFrame = {
-    val hit = ivfQueryPanel(spark, dir).filter(q => ids.contains(q._1))
-    fuseDriverSide(spark, requestTopK(ivfLegScored(spark, dir, hit)
-      .unionByName(lexLegScored(spark, dir, ids)), 10), k)
+    val hit = ivfQueryPanel(spark, dir).filter(q => ids.contains(q.qId))
+    val terms = requestTerms(spark, dir, ids)
+    val ivf = ivfShards(spark, dir)
+    val corpus = fusedShards(spark, dir)
+    fuseDriverSide(spark, ServeShards.gather(spark,
+      Seq(ivf -> ivf.holding(hit), corpus -> (if (terms.isEmpty) Nil else corpus.all)),
+      hit, terms, semOnIvf = true, 10), k)
   }
 
   /** The `assigned` index-build CTE chain shared by q44 and q130 —

@@ -5,7 +5,8 @@ import java.nio.file.Files
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
+  SparkListenerStageSubmitted, SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
@@ -376,5 +377,94 @@ class ServeSpec extends AnyFunSuite with SparkSpec with Matchers {
         all(plans.map(_.toLowerCase)) should not include "rangepartitioning"
         rows.map(_.getLong(0)).distinct shouldBe Seq(1L, 3L, 6L)
       }
+  }
+
+  test("the ivf request path follows a mid-session spark.graft.ivf.codebook " +
+      "flip: served under 'label', then under 'trained', it answers q44's " +
+      "trained rows, and fused-ann probes the trained cells") {
+    val conf = Similarity.IvfCodebookConf
+    val ids = Similarity.servableQueryIds(spark, sfDir)
+    def q44() = SparkEntry.queries("q44_ivf_ann")(spark, sfDir).collect().toSeq
+    try {
+      spark.conf.set(conf, "label")
+      val label = Similarity.serveIvfRequest(spark, sfDir, ids).collect().toSeq
+      label shouldBe q44()
+      Similarity.serveFusedAnnRequest(spark, sfDir, ids).collect()
+      spark.conf.set(conf, "trained")
+      val trained = q44()
+      trained should not be label
+      Similarity.servableQueryIds(spark, sfDir) shouldBe ids
+      Similarity.serveIvfRequest(spark, sfDir, ids).collect().toSeq shouldBe trained
+      val cellOf = Similarity.ivfAssigned(spark, sfDir)
+        .select("vec_id", "cell").collect()
+        .map(r => r.getLong(0) -> r.getInt(1)).toMap
+      val ann = Similarity.serveFusedAnnRequest(spark, sfDir, ids).collect()
+      ann.filter(_.getLong(2) > 0L).foreach { r =>
+        cellOf(r.getLong(1)) shouldBe cellOf(r.getLong(0))
+      }
+    } finally {
+      spark.conf.unset(conf)
+      graft.operators.Features.clear(spark)
+    }
+  }
+
+  /** Runs `request` once to warm, then again counted: Spark jobs,
+    * stages submitted, the partitions its tasks ran on, and the shuffle
+    * bytes written. */
+  private def jobShape(request: => DataFrame): (Int, Int, Seq[Int], Long) = {
+    request.collect()
+    val jobs, stages = new java.util.concurrent.atomic.AtomicInteger()
+    val shuffled = new java.util.concurrent.atomic.AtomicLong()
+    val parts = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+        stages.incrementAndGet()
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit = {
+        parts.add(e.taskInfo.partitionId)
+        if (e.taskMetrics != null)
+          shuffled.addAndGet(e.taskMetrics.shuffleWriteMetrics.bytesWritten)
+      }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      request.collect()
+      SqlActionCounter.drainListenerBus(spark)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    (jobs.get, stages.get, parts.asScala.toSeq.sorted, shuffled.get)
+  }
+
+  test("a warm request runs ONE job of one stage with no shuffle write, " +
+      "and an ivf request for one id runs tasks only on the shards " +
+      "holding its probed cell; Features.clear unpersists the shards") {
+    for ((name, request) <- Seq[(String, Seq[Long] => DataFrame)](
+        "fused" -> (ids => Similarity.serveFusedRequest(spark, sfDir, ids)),
+        "ivf" -> (ids => Similarity.serveIvfRequest(spark, sfDir, ids)),
+        "fused-ann" -> (ids => Similarity.serveFusedAnnRequest(spark, sfDir, ids))))
+      withClue(s"$name: ") {
+        val (jobs, stages, parts, shuffled) = jobShape(request(Seq(6L, 1L, 3L)))
+        jobs shouldBe 1
+        stages shouldBe 1
+        parts should not be empty
+        shuffled shouldBe 0L
+      }
+    val cellOf = Similarity.ivfAssigned(spark, sfDir)
+      .select("vec_id", "cell").collect()
+      .map(r => r.getLong(0) -> r.getInt(1)).toMap
+    val shards = Similarity.ivfShards(spark, sfDir)
+    val cellsByShard = shards.rdd
+      .mapPartitionsWithIndex((p, it) => it.map(s => p -> s.cells.toSet))
+      .collect().toMap
+    for (id <- Similarity.servableQueryIds(spark, sfDir)) withClue(s"id $id: ") {
+      val holding = cellsByShard.filter(_._2.contains(cellOf(id))).keys.toSeq.sorted
+      val (jobs, _, parts, _) = jobShape(Similarity.serveIvfRequest(spark, sfDir, Seq(id)))
+      jobs shouldBe 1
+      parts shouldBe holding
+      holding.size should be < shards.rdd.getNumPartitions
+    }
+    // the shards live in the Features cache: clearing it unpersists them
+    graft.operators.Features.clear(spark)
+    spark.sparkContext.getPersistentRDDs.keySet should not contain shards.rdd.id
   }
 }
