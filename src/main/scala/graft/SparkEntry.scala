@@ -23,12 +23,13 @@ object SparkEntry {
     * Every entry is wrapped in [[graft.operators.Features.memoQuery]]:
     * building a query's DataFrame is driver-side analyzer work measured
     * at 0.04–1.5 s per query at sf0.1 (suite-wide ~25 s/pass), and the
-    * built frame is immutable — so it is memoized per (session,
-    * spark.graft.* conf state, dir). Actions on the memoized frame still
-    * execute the full physical plan from the parquet inputs each time
-    * (plan cache, not result cache — PlanMemoSpec pins this), and a
-    * flipped graft mode knob or `spark.graft.features.cache=off` builds
-    * fresh. */
+    * built frame is immutable — so it is memoized in the `Features`
+    * registry, keyed by (session, dir, `q#<name>`, spark.graft.* conf
+    * state) and checked against the dir's input stamp on every lookup.
+    * Actions on the memoized frame still execute the full physical plan
+    * from the parquet inputs each time (plan cache, not result cache —
+    * PlanMemoSpec pins this); a flipped graft mode knob, a rewritten
+    * input or `spark.graft.features.cache=off` builds fresh. */
   lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
     rawQueries.map { case (name, fn) =>
       name -> ((spark: SparkSession, dir: String) => {
@@ -38,7 +39,7 @@ object SparkEntry {
         // registry, same context) would otherwise hit
         // unresolvedRoutineError on the limb-sum family
         graft.plans.GraftExtensions.register(spark)
-        graft.operators.Features.memoQuery(spark, dir, s"$dir#q#$name")(
+        graft.operators.Features.memoQuery(spark, dir, s"q#$name")(
           fn(spark, dir))
       })
     }

@@ -51,9 +51,9 @@ object Parity {
     s"(CAST(CAST(FLOOR($e) AS BIGINT) AS DOUBLE) + CAST(($e) - FLOOR($e) AS DOUBLE))"
 
   /** Order-independent sum of a double column, returned as double.
-    * Two-limb long aggregation ([[LimbSum]]) — bit-identical to
-    * `decToDouble(sum(dec(c)))` (the [[dsumDec]] legacy form,
-    * `LimbSumSpec`-pinned) with no Decimal buffer in the plan. */
+    * Two-limb long aggregation ([[LimbSum]]) — bit-identical to the
+    * legacy decimal-buffer form `decToDouble(sum(dec(c)))`
+    * (`LimbSumSpec`-pinned) with no Decimal buffer in the plan. */
   def dsum(c: Column): Column = LimbSum.limbSum(LimbSum.u4(c), 4)
 
   /** Deterministic average: exact decimal sum, then one double division.
@@ -67,16 +67,10 @@ object Parity {
 
   /** Order-independent sum of the revenue term, as double: fused
     * unscaled-long product (scale 8) + two-limb sum — bit-identical to
-    * [[dsumRevenueDec]] (`LimbSumSpec`-pinned). */
+    * the legacy decimal-buffer form `decToDouble(sum(revenue(price,
+    * discount)))` (`LimbSumSpec`-pinned). */
   def dsumRevenue(price: Column, discount: Column): Column =
     LimbSum.limbSum(LimbSum.revU8(price, discount), 8)
-
-  /** Legacy decimal-buffer forms, kept as the equivalence reference the
-    * limb implementations are spec-pinned against (and as the fallback
-    * if an input domain ever escalates past the fused-long bounds). */
-  def dsumDec(c: Column): Column = decToDouble(sum(dec(c)))
-  def dsumRevenueDec(price: Column, discount: Column): Column =
-    decToDouble(sum(revenue(price, discount)))
 
   /** Portable uniform hash: unsigned 32-bit int from the md5 hex prefix.
     * DuckDB equivalent: `('0x' || substr(md5(x), 1, 8))::BIGINT`. */

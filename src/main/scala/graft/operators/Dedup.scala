@@ -95,7 +95,7 @@ object Dedup {
 
   // --- Shared MinHash machinery (q35 candidate generation, q54/q59
   // verify reuse, q69's incremental new×old variant). ONE definition per
-  // stage so the cache key `$dir#minhashSig` can only ever hold one
+  // stage so the registry name `minhashSig` can only ever hold one
   // semantics — the round-2 advisor flagged that q35 and q69 carried
   // duplicate inline copies that the shared cache would silently fork.
 
@@ -103,7 +103,7 @@ object Dedup {
     * (session, dir) over the post-hash shingle longs and read by every
     * MinHash consumer — q35's self-join reads it from three sides. */
   private def minhashSig(spark: SparkSession, dir: String): DataFrame =
-    Features.cachedFrame(spark, s"$dir#minhashSig") {
+    Features.cachedFrame(spark, dir, "minhashSig") {
       Features.hashedShingles(spark, dir)
         .groupBy(col("doc_id"))
         .agg(min(perm(0, col("h"))).as("m0"),
@@ -446,7 +446,7 @@ object Dedup {
     val simhash = (0 until 2 * half)
       .map(j => when(col(s"s$j") > 0L, lit(1L << j)).otherwise(lit(0L)))
       .reduce(_ + _)
-    val fp = Features.cachedFrame(spark, s"$dir#simhashFp64") {
+    val fp = Features.cachedFrame(spark, dir, "simhashFp64") {
       bitSums.select(col("doc_id"), simhash.as("simhash"))
     }
     val banded = fp.select(col("doc_id"), col("simhash"),
@@ -472,7 +472,7 @@ object Dedup {
       .map(j => when(col(s"s$j") > 0L, lit(1L << j)).otherwise(lit(0L)))
       .reduce(_ + _)
     // both sides of the band self-join read this → managed cache
-    val fp = Features.cachedFrame(spark, s"$dir#simhashFp") {
+    val fp = Features.cachedFrame(spark, dir, "simhashFp") {
       bitSums.select(col("doc_id"), simhash.as("simhash"))
     }
 
@@ -582,7 +582,7 @@ object Dedup {
     * once per session, and the cached frame is candidate-pairs-sized
     * (df-capped, bounded), not corpus-sized. */
   private def jaccardScoredPairs(spark: SparkSession, dir: String): DataFrame =
-    Features.cachedFrame(spark, s"$dir#jaccardPairs") {
+    Features.cachedFrame(spark, dir, "jaccardPairs") {
       jaccardScoredPairsBuild(spark, dir)
     }
 
@@ -843,13 +843,13 @@ object Dedup {
     * [[ccLabelsAuto]]: one-hop propagation with the star-operator
     * escalation armed (never triggered on dup graphs — diameter 1-2). */
   private def ccLabels(spark: SparkSession, dir: String): DataFrame =
-    Features.cachedFrame(spark, s"$dir#ccLabels") {
+    Features.cachedFrame(spark, dir, "ccLabels") {
       val pairs = q35(spark, dir).select(col("doc_a"), col("doc_b"))
       // Symmetric edge list, reused every round → managed cache, cut to
       // a LEAF: each fixpoint round plans a join against this frame, and
       // with a plain persist every round's driver-side planning re-walks
       // the full candidate-join lineage embedded in its InMemoryRelation.
-      val edges = Features.cachedFrame(spark, s"$dir#dedupEdges") {
+      val edges = Features.cachedFrame(spark, dir, "dedupEdges") {
         pairs.union(pairs.select(col("doc_b"), col("doc_a")))
           .toDF("src", "dst").localCheckpoint()
       }
@@ -1267,7 +1267,7 @@ object Dedup {
     // Sketches are memoized per (session, dir) — production materializes
     // them next to the corpus index; a per-run rebuild would charge two
     // extra corpus actions to every probe.
-    val blooms = Features.cachedValue(spark, s"$dir#corpusBlooms") {
+    val blooms = Features.cachedValue(spark, Some(dir), "corpusBlooms") {
       corpusBlooms(corpusFp, corpusSig)
     }
     incrementalDecisions(
@@ -1310,7 +1310,7 @@ object Dedup {
     * re-aggregates it — without the shared stage the dashboard would
     * re-run the whole gate it summarizes. */
   private[graft] def contamScores(spark: SparkSession, dir: String): DataFrame =
-    Features.cachedFrame(spark, s"$dir#contamScores") {
+    Features.cachedFrame(spark, dir, "contamScores") {
       val train = Features.hashedShingles(spark, dir)
         .filter(col("doc_id") % EvalSliceMod =!= 0)
       contamScoresOver(train, evalPostings(spark, dir))
@@ -1403,7 +1403,7 @@ object Dedup {
     * 5-column leaf. Freed by `Features.clear` via `freeFrame` (plain
     * `unpersist` is a no-op for checkpoint-backed frames). */
   private def funnelFlags(spark: SparkSession, dir: String): DataFrame =
-    Features.cachedFrame(spark, s"$dir#funnelFlags") {
+    Features.cachedFrame(spark, dir, "funnelFlags") {
       funnelFlagsUncached(spark, dir).localCheckpoint()
     }
 
@@ -1430,7 +1430,7 @@ object Dedup {
     // Memoized like the label tables: the contaminated-id set was the
     // one funnel stage rebuilt per run (two shuffles over the shingle
     // features each time) — materialize it once per (session, dir).
-    val contaminated = Features.cachedFrame(spark, s"$dir#contamIds") {
+    val contaminated = Features.cachedFrame(spark, dir, "contamIds") {
       val post = Features.hashedShingles(spark, dir)
       post.filter(col("doc_id") % EvalSliceMod =!= 0)
         .join(broadcast(post.filter(col("doc_id") % EvalSliceMod === 0)
@@ -1484,7 +1484,7 @@ object Dedup {
       .select(col("id").as("t_id"), col("canon").as("t_canon"))
     val sLbl = reElected(Similarity.embCcLabels(spark, dir))
       .select(col("id").as("s_id"), col("canon").as("s_canon"))
-    val contaminated = Features.cachedFrame(spark, s"$dir#contamIds") {
+    val contaminated = Features.cachedFrame(spark, dir, "contamIds") {
       val post = Features.hashedShingles(spark, dir)
       post.filter(col("doc_id") % EvalSliceMod =!= 0)
         .join(broadcast(post.filter(col("doc_id") % EvalSliceMod === 0)
@@ -1758,7 +1758,7 @@ object Dedup {
     * percent; broadcasting the admits would ship nearly the corpus),
     * memoized per (session, dir) like the funnel's other stage tables. */
   private[graft] def qualityRejects(spark: SparkSession, dir: String): DataFrame =
-    Features.cachedFrame(spark, s"$dir#qualityRejects") {
+    Features.cachedFrame(spark, dir, "qualityRejects") {
       TextAnalysis.corpusQualityDecisions(spark, dir)
         .filter(!col("admit")).select(col("doc_id").as("q_id"))
         .localCheckpoint()
@@ -2212,7 +2212,7 @@ object Dedup {
     // sides + two size lookups), and Catalyst does not dedupe common
     // subplans — uncached, each side would rescan + re-distinct the
     // full corpus.
-    val fps = Features.cachedFrame(spark, s"$dir#sourceFps") {
+    val fps = Features.cachedFrame(spark, dir, "sourceFps") {
       Tables.documents(spark, dir)
         .select(col("source"), contentFp(col("text")).as("fp"))
         .distinct()
@@ -3040,7 +3040,7 @@ object Dedup {
     * are small and versioned, so the artifact ships like
     * [[evalPostings]]). */
   private[graft] def evalSpanWindows(spark: SparkSession, dir: String): DataFrame =
-    Features.cachedFrame(spark, s"$dir#evalSpanWindows") {
+    Features.cachedFrame(spark, dir, "evalSpanWindows") {
       spanWindowsOver(Tables.documents(spark, dir)
         .filter(col("doc_id") % EvalSliceMod === 0))
         .groupBy(col("h")).agg(min(col("doc_id")).as("min_eval_doc"))
@@ -3075,7 +3075,7 @@ object Dedup {
     * [[contamScores]]' posture for the span gate: q118 presents it and
     * q119's triage re-aggregates it. */
   private[graft] def spanScores(spark: SparkSession, dir: String): DataFrame =
-    Features.cachedFrame(spark, s"$dir#spanScores") {
+    Features.cachedFrame(spark, dir, "spanScores") {
       spanScoresOver(
         Tables.documents(spark, dir)
           .filter(col("doc_id") % EvalSliceMod =!= 0),

@@ -491,7 +491,7 @@ object Events {
     * fact query joins, not a per-query rebuild — the [[sessionized]]
     * posture applied to the dimension. */
   private def scd2Intervals(spark: SparkSession, dir: String): DataFrame =
-    Features.cachedFrame(spark, s"$dir#scd2Intervals") {
+    Features.cachedFrame(spark, dir, "scd2Intervals") {
       scd2IntervalsOf(Tables.events(spark, dir)
         .select(col("user_id"), col("event_id"), col("ts"), col("event_type")))
     }
@@ -582,7 +582,7 @@ object Events {
     // exactly what the production posture (a parquet READ of a stored
     // table) never pays. The cache is the fixture's stand-in for that
     // stored parquet.
-    val stored = Features.cachedFrame(spark, s"$dir#q148Stored") {
+    val stored = Features.cachedFrame(spark, dir, "q148Stored") {
       scd2IntervalsOf(hist)
     }
     val deltaUsers = delta.select(col("user_id")).distinct()
@@ -2051,7 +2051,7 @@ object Events {
     * frame is the materialized session table every product-analytics
     * query reads, not a per-query window stack. */
   private[graft] def sessionized(spark: SparkSession, dir: String): DataFrame =
-    Features.cachedFrame(spark, s"$dir#sessionized") {
+    Features.cachedFrame(spark, dir, "sessionized") {
       val byUser = Window.partitionBy(col("user_id"))
         .orderBy(col("ts"), col("event_id"))
       val cum = byUser.rowsBetween(Window.unboundedPreceding, Window.currentRow)

@@ -244,7 +244,7 @@ private[graft] object ServeShards {
     * empty relation of the gathered rows' schema per session, so a
     * request plans nothing. */
   private def execution(spark: SparkSession): QueryExecution =
-    Features.cachedValue(spark, "serveShardsExecution") {
+    Features.cachedValue(spark, None, "serveShardsExecution") {
       val qe = spark.createDataFrame(java.util.Collections.emptyList[Row](),
         HitSchema).queryExecution
       qe.executedPlan

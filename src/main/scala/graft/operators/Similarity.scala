@@ -769,8 +769,8 @@ object Similarity {
     * ~n/100 longs where the loose-regime graph held cluster². */
   private[operators] def cellBlockedCcLabels(spark: SparkSession,
       dir: String): DataFrame =
-    Features.cachedFrame(spark, s"$dir#cellBlockedCcLabels") {
-      val edges = Features.cachedFrame(spark, s"$dir#cellBlockedEdges") {
+    Features.cachedFrame(spark, dir, "cellBlockedCcLabels") {
+      val edges = Features.cachedFrame(spark, dir, "cellBlockedEdges") {
         val pairs = cellBlockedNearDup(spark, dir, FixtureNearIdentCosine,
           FixtureNearIdentBits, FixtureNearIdentBands)
           .select(col("a_id"), col("b_id"))
@@ -866,7 +866,7 @@ object Similarity {
     * half-split drift probes) keep calling [[centroids]] directly. */
   private[graft] def labelCentroids(spark: SparkSession,
       dir: String): DataFrame =
-    Features.cachedFrame(spark, s"$dir#labelCentroids") {
+    Features.cachedFrame(spark, dir, "labelCentroids") {
       centroids(scaledEmb(spark, dir))
     }
 
@@ -949,18 +949,15 @@ object Similarity {
     * map-side combine collapses the 10 candidate rows per vector to one
     * buffer before the shuffle, and nothing sorts. ONE definition —
     * q44's serving path and q130's index-health audit both read it. */
-  private[graft] def ivfAssigned(spark: SparkSession, dir: String): DataFrame = {
-    // r17: memoized per (session, dir, codebook mode) — q44/q130/q137/
-    // q166 and the serve path each re-derived the same assignment
-    // fan-out per consumer. The mode rides the key so a flipped
-    // spark.graft.ivf.codebook builds its own frame (and the label mode
-    // shares [[labelAssigned]]'s — one build serves both families).
-    val mode = spark.conf.getOption(IvfCodebookConf)
-      .map(_.trim).getOrElse("label")
-    Features.cachedFrame(spark, s"$dir#ivfAssigned#$mode") {
+  private[graft] def ivfAssigned(spark: SparkSession, dir: String): DataFrame =
+    // r17: memoized — q44/q130/q137/q166 and the serve path each
+    // re-derived the same assignment fan-out per consumer. The label
+    // codebook's assignment IS [[labelAssigned]]'s frame: one build
+    // serves both families.
+    if (ivfCodebookMode(spark) == "label") labelAssigned(spark, dir)
+    else Features.cachedFrame(spark, dir, "ivfAssigned") {
       ivfAssignOver(scaledEmb(spark, dir), ivfCodebook(spark, dir))
     }
-  }
 
   /** [[ivfAssigned]]'s assignment applied to an ARBITRARY scaled frame
     * (carrying vec_id, sv, n2, and optionally label) against an
@@ -1003,7 +1000,7 @@ object Similarity {
     spark.conf.getOption(IvfCodebookConf).map(_.trim).getOrElse("label") match {
       case "label" => labelCentroids(spark, dir)
       case "trained" =>
-        Features.cachedFrame(spark, s"$dir#ivfTrainedCodebook") {
+        Features.cachedFrame(spark, dir, "ivfTrainedCodebook") {
           kmeansAuto(scaledEmb(spark, dir), IvfCells, Dim).centroids
             .select(col("c_id").cast("int").as("c_label"),
               col("cv").as("cs"), col("cn2"))
@@ -1062,11 +1059,11 @@ object Similarity {
     * [[ServeShards]] shards in [[IvfCells]] partitions keyed by cell,
     * so a request runs tasks only on the shards holding its probed
     * cells (at 100 TB: cell-partitioned index files, one read per
-    * probed cell). Built once per (session, dir, input stamp, codebook
-    * mode). */
+    * probed cell). Built once per (session, dir, input stamp, conf
+    * state), so a flipped codebook serves its own index. */
   private[graft] def ivfShards(spark: SparkSession, dir: String)
       : ServeShards.ShardSet =
-    Features.cachedValue(spark, s"$dir#ivfShards#${ivfCodebookMode(spark)}") {
+    Features.cachedValue(spark, Some(dir), "ivfShards") {
       ServeShards.ivfShards(spark, ivfAssigned(spark, dir)
         .filter(col("vec_id") >= NQueries)
         .select(col("vec_id"), col("sv"), col("n2"), col("cell"))
@@ -1075,11 +1072,11 @@ object Similarity {
 
   /** Driver-memoized query panel: the ≤[[NQueries]] servable queries
     * with scaled vector, exact squared norm and index cell, collected
-    * ONCE per (session, dir, codebook mode), so a request resolves its
+    * ONCE per (session, dir, conf state), so a request resolves its
     * query vectors and probe cells without any Spark job. */
   private def ivfQueryPanel(spark: SparkSession, dir: String)
       : Seq[ServeShards.Query] =
-    Features.cachedValue(spark, s"$dir#ivfQueryPanel#${ivfCodebookMode(spark)}") {
+    Features.cachedValue(spark, Some(dir), "ivfQueryPanel") {
       ivfAssigned(spark, dir).filter(col("vec_id") < NQueries)
         .select(col("vec_id"), col("sv"), col("n2"), col("cell"))
         .collect().toSeq
@@ -1172,7 +1169,7 @@ object Similarity {
     * stamp). */
   private def fusedShards(spark: SparkSession, dir: String)
       : ServeShards.ShardSet =
-    Features.cachedValue(spark, s"$dir#fusedShards") {
+    Features.cachedValue(spark, Some(dir), "fusedShards") {
       ServeShards.corpusShards(spark,
         scaledEmb(spark, dir).filter(col("vec_id") >= NQueries),
         fusedServePostings(spark, dir))
@@ -1190,7 +1187,7 @@ object Similarity {
       nDocs: Long, sumDl: Long)
 
   private[graft] def fusedServePanel(spark: SparkSession, dir: String): FusedPanel =
-    Features.cachedValue(spark, s"$dir#fusedServePanel") {
+    Features.cachedValue(spark, Some(dir), "fusedServePanel") {
       val docs = Tables.documents(spark, dir)
       val qs = scaledEmb(spark, dir).filter(col("vec_id") < NQueries)
         .select(col("vec_id"), col("sv"), col("n2"))
@@ -1451,7 +1448,7 @@ object Similarity {
     * and q136's ADC serving path read the SAME assignment, so the
     * audited index and the queried index cannot diverge. */
   private[graft] def pqCodesAssigned(spark: SparkSession, dir: String): DataFrame =
-    Features.cachedFrame(spark, s"$dir#pqCodes") {
+    Features.cachedFrame(spark, dir, "pqCodes") {
       val emb = scaledEmb(spark, dir)
       pqEncodeOver(emb, pqCodebook(emb))
     }
@@ -1657,9 +1654,7 @@ object Similarity {
     * the probe cell — broadcast by construction; the serving scan
     * reads code rows only. The exact leg is q38's broadcast shape and
     * at 100 TB runs on a query sample, exactly like q113/q136. */
-  /** The codebook mode in effect — suffixes the residual/code memo keys
-    * so a mid-session conf flip can never serve the other codebook's
-    * index (the BPE-merge-budget cache-key discipline). */
+  /** The codebook mode in effect. */
   private def ivfCodebookMode(spark: SparkSession): String =
     spark.conf.getOption(IvfCodebookConf).map(_.trim).getOrElse("label")
 
@@ -1692,8 +1687,7 @@ object Similarity {
     }
 
   private[graft] def ivfPqResiduals(spark: SparkSession, dir: String): DataFrame =
-    Features.cachedFrame(spark,
-        s"$dir#ivfPqResid@${ivfCodebookMode(spark)}") {
+    Features.cachedFrame(spark, dir, "ivfPqResid") {
       ivfAssigned(spark, dir)
         .join(broadcast(ivfCellMeans(spark, dir)), "cell")
         .select(col("vec_id"), col("cell"),
@@ -1704,8 +1698,7 @@ object Similarity {
     * residual code, carrying its cell — memoized so the audit rows and
     * the ADC serving path read one assignment. */
   private[graft] def ivfPqCodes(spark: SparkSession, dir: String): DataFrame =
-    Features.cachedFrame(spark,
-        s"$dir#ivfPqCodes@${ivfCodebookMode(spark)}") {
+    Features.cachedFrame(spark, dir, "ivfPqCodes") {
       val resid = ivfPqResiduals(spark, dir)
       pqEncodeOver(resid, pqCodebook(resid))
         .join(resid.select(col("vec_id"), col("cell")), "vec_id")
@@ -2253,7 +2246,7 @@ object Similarity {
     * curation funnel (ONE definition per cache key, so the shared cache
     * can only ever hold one semantics). */
   private[operators] def embCcLabels(spark: SparkSession, dir: String): DataFrame =
-    Features.cachedFrame(spark, s"$dir#embCcLabels") {
+    Features.cachedFrame(spark, dir, "embCcLabels") {
       // The symmetric edge list is referenced by EVERY fixpoint round
       // (hop join + the materializing sum action) — cache it, or each
       // round re-runs the whole q40 bucketed self-join + cosine filter
@@ -2261,7 +2254,7 @@ object Similarity {
       // Leaf-cut like Dedup's edge cache: every fixpoint round re-plans
       // against this frame, and a plain persist would make each round's
       // driver-side planning walk the whole q40 lineage it embeds.
-      val edges = Features.cachedFrame(spark, s"$dir#embDedupEdges") {
+      val edges = Features.cachedFrame(spark, dir, "embDedupEdges") {
         val raw = nearDupPairsRaw(spark, dir, TestdataNearDupCosine)
         // effective cap: the operator's explicit knob, else the
         // pre-flight guard's decision (None = oracle-pinned uncapped)
@@ -2555,7 +2548,7 @@ object Similarity {
     * would at ~10¹⁰ rows). */
   // Memoized per (session, dir): composed by the q174 drift panel.
   private def q100(spark: SparkSession, dir: String): DataFrame =
-    Features.cachedFrame(spark, s"$dir#q100EmbDrift") {
+    Features.cachedFrame(spark, dir, "q100EmbDrift") {
     val j = scaledEmb(spark, dir)
       .join(Tables.documents(spark, dir)
         .select(col("doc_id"), col("source")),
@@ -2998,7 +2991,7 @@ object Similarity {
 
   // Memoized per (session, dir): composed by the q174 drift panel.
   private def q126(spark: SparkSession, dir: String): DataFrame =
-    Features.cachedFrame(spark, s"$dir#q126LabelPsi") {
+    Features.cachedFrame(spark, dir, "q126LabelPsi") {
     val cells = Tables.embeddings(spark, dir)
       .select(col("vec_id"), col("label").cast(LongType).as("lbl"))
       .join(Tables.documents(spark, dir)
@@ -3445,9 +3438,9 @@ object Similarity {
     // measured ~6 CPU-s per copy at sf0.1). At warehouse scale the
     // assignment table is materialized once next to the index, not
     // re-assigned per audit — the centroidMargins/sessionized posture
-    // applied to the assignment itself. Key shared with [[ivfAssigned]]
-    // in label-codebook mode: same frame, one build.
-    Features.cachedFrame(spark, s"$dir#ivfAssigned#label") {
+    // applied to the assignment itself. [[ivfAssigned]] returns this
+    // frame in label-codebook mode: same frame, one build.
+    Features.cachedFrame(spark, dir, "ivfAssigned#label") {
       val emb = scaledEmb(spark, dir)
       ivfAssignOver(emb, labelCentroids(spark, dir))
     }
@@ -3520,7 +3513,7 @@ object Similarity {
     * label-centroid classifier). */
   private[graft] def centroidMargins(spark: SparkSession,
       dir: String): DataFrame =
-    Features.cachedFrame(spark, s"$dir#centroidMargins") {
+    Features.cachedFrame(spark, dir, "centroidMargins") {
       val emb = scaledEmb(spark, dir)
       val cent = labelCentroids(spark, dir)
       emb.crossJoin(broadcast(cent))
@@ -4431,7 +4424,7 @@ object Similarity {
 
   private[graft] def confidentPreds(spark: SparkSession,
       dir: String): DataFrame =
-    Features.cachedFrame(spark, s"$dir#confidentPreds") {
+    Features.cachedFrame(spark, dir, "confidentPreds") {
       val cos = confidentCos(spark, dir)
       val thr = confidentThr(cos)
       // One pass over the fan-out: the confident argmax (non-clearing
@@ -4602,7 +4595,7 @@ object Similarity {
     * (sources × labels)-sized and partial-aggregable. */
   // Memoized per (session, dir): composed by the q183 trust panel.
   private def q181(spark: SparkSession, dir: String): DataFrame =
-    Features.cachedFrame(spark, s"$dir#q181NoiseBySource") {
+    Features.cachedFrame(spark, dir, "q181NoiseBySource") {
     val docs = Tables.documents(spark, dir)
       .select(col("doc_id"), col("source"))
     val base = scaledEmb(spark, dir)
@@ -4701,7 +4694,7 @@ object Similarity {
     * composition re-priced the fan-out on top of q182's own run). */
   private[graft] def confidenceBuckets(spark: SparkSession,
       dir: String): DataFrame =
-    Features.cachedFrame(spark, s"$dir#confidenceBuckets") {
+    Features.cachedFrame(spark, dir, "confidenceBuckets") {
       confidentCos(spark, dir)
         .groupBy(col("vec_id")).agg(max(col("cos_s")).as("conf_s"))
         .withColumn("b", expr("conf_s div 1000"))
@@ -4709,7 +4702,7 @@ object Similarity {
 
   // Memoized per (session, dir): composed by the q183 trust panel.
   private def q182(spark: SparkSession, dir: String): DataFrame =
-    Features.cachedFrame(spark, s"$dir#q182ConfDrift") {
+    Features.cachedFrame(spark, dir, "q182ConfDrift") {
     val conf = confidenceBuckets(spark, dir)
     val docs = Tables.documents(spark, dir)
       .select(col("doc_id"), col("source"))
@@ -4885,7 +4878,7 @@ object Similarity {
     // reuse was the old trick's only win). Measured at sf0.1, 5-pass
     // isolated: cached-agg 0.69 s vs repartition-first 0.96 s vs
     // (source,g)-first 1.13 s vs agg-then-repartition 1.30 s.
-    val cells = Features.cachedFrame(spark, s"$dir#q186Cells") {
+    val cells = Features.cachedFrame(spark, dir, "q186Cells") {
       labelAssigned(spark, dir)
         .select(col("vec_id"), col("label").cast(LongType).as("g"),
           col("cell").cast(LongType).as("p"))
@@ -5272,13 +5265,12 @@ object Similarity {
 
   /** The SERVED kNN edge table (q_id, q_label, nb): each vector's
     * top-[[HubK]] in-bucket cosine neighbors under q39's exact rank
-    * discipline. Session-memoized per (dir, bits, k) — q193's hubness
+    * discipline. Session-memoized per (dir, conf state) — q193's hubness
     * bands and q204's reciprocity audit both read it, and the n·k
     * frame is referenced three times inside q204 alone, so the
     * "feature table built once" posture pays within a single query. */
   private def knnEdges(spark: SparkSession, dir: String): DataFrame =
-    Features.cachedFrame(spark,
-      s"$dir#knnEdges#${lshBits(spark)}#$HubK") {
+    Features.cachedFrame(spark, dir, s"knnEdges#$HubK") {
       // Zero-norm vectors cannot rank (cosine 0/0); they are excluded
       // from the served graph on BOTH sides — q238's quality audit is
       // where they surface, not as NaN edges here.

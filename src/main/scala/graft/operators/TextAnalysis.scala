@@ -1322,7 +1322,7 @@ object TextAnalysis {
     // shared artifact-size cap falls back to the join plan for an
     // oversized bigram vocabulary.
     val docs = Tables.documents(spark, dir)
-    // One memoized decision+artifact per (cap, dir): the size guard and
+    // One memoized decision+artifact per (dir, conf state): the size guard and
     // the collect share one derivation of the count tables (None =
     // oversized ⇒ join plan). Guard counts the BIGRAM vocabulary — the
     // artifact's dominant table.
@@ -1330,7 +1330,7 @@ object TextAnalysis {
       if (Features.lmScoringJoin(spark)) None
       else {
         val cap = Features.lmMaxBroadcastTerms(spark)
-        Features.cachedValue(spark, s"bigramLmArtifact#$cap#$dir") {
+        Features.cachedValue(spark, Some(dir), "bigramLmArtifact") {
           val (bc, ctx, _, _) = bigramLmTables(spark, dir)
           // Size guard COUNTS before it collects — the count job
           // collapses distributed (never drivers an oversized
@@ -1537,7 +1537,7 @@ object TextAnalysis {
     * input for [[qualityDecisions]] — batch q89 derives it from the
     * corpus itself; a streaming deployment freezes one and ships it. */
   private[graft] def lmTable(spark: SparkSession, dir: String): DataFrame =
-    Features.cachedFrame(spark, s"$dir#lmTable") {
+    Features.cachedFrame(spark, dir, "lmTable") {
       // ONE token explode; the per-lang totals re-aggregate the
       // vocab-sized counts frame instead of re-scanning the corpus
       // (sum(cnt) ≡ the direct token count). Memoized per (session,
@@ -1566,22 +1566,10 @@ object TextAnalysis {
     * they don't re-adjudicate. The streaming gate keeps calling
     * [[qualityDecisions]] per micro-batch — its input is transient. */
   private[graft] def corpusQualityDecisions(spark: SparkSession,
-      dir: String): DataFrame = {
-    // The LM scoring-mode knobs change what the builder EMITS (plan
-    // shape AND validation), so they ride the cache key — the
-    // [[graft.operators.Similarity]] ivfAssigned discipline. The RAW
-    // conf values key the entry, so an invalid mode always MISSES and
-    // the builder's validation throws (LmScoringModeSpec's contract);
-    // a flipped mode builds its own frame instead of replaying the
-    // other mode's plan.
-    val mode = spark.conf.getOption(Features.LmScoringConf)
-      .map(_.trim).getOrElse("broadcast")
-    val cap = spark.conf.getOption(Features.LmMaxBroadcastTermsConf)
-      .map(_.trim).getOrElse("default")
-    Features.cachedFrame(spark, s"$dir#qualityDecisions#$mode#$cap") {
+      dir: String): DataFrame =
+    Features.cachedFrame(spark, dir, "qualityDecisions") {
       qualityDecisions(Tables.documents(spark, dir), lmTable(spark, dir))
     }
-  }
 
   private[graft] def qualityDecisions(docs: DataFrame, lm: DataFrame): DataFrame = {
     val spark = docs.sparkSession
@@ -1600,12 +1588,12 @@ object TextAnalysis {
     // unbounded LM. Past the conf'd term cap the gate REFUSES to build
     // the artifact and runs the bit-identical join form instead (same
     // rows under the same oracles — only the plan degrades, to a
-    // shuffle). Decision memoized per (LM identity, cap).
+    // shuffle). Decision memoized per (LM identity, conf state).
     val lmHash = lm.queryExecution.analyzed.semanticHash()
     val joinMode = Features.lmScoringJoin(spark) || {
       val cap = Features.lmMaxBroadcastTerms(spark)
-      val oversized = Features.cachedValue(spark,
-        s"lmOversized#$cap#$lmHash") {
+      val oversized = Features.cachedValue(spark, None,
+        s"lmOversized#$lmHash") {
         java.lang.Boolean.valueOf(lm.count() > cap)
       }.booleanValue()
       if (oversized)
@@ -1621,7 +1609,7 @@ object TextAnalysis {
         // self-register against the session actually running this query
         // (bare newSession()s start with an empty custom registry)
         graft.functions.VectorExprs.ensureRegistered(spark)
-        val bytes = Features.cachedValue(spark, s"lmArtifact#$lmHash") {
+        val bytes = Features.cachedValue(spark, None, s"lmArtifact#$lmHash") {
           val rows = lm.select(col("lang"), col("w"), col("cnt"),
             col("total_l")).collect()
           // A null-lang LM row (a corpus with untagged documents feeds
@@ -2501,7 +2489,7 @@ object TextAnalysis {
     * per (session, dir); batch q107 and the streaming scorer
     * ([[graft.streaming.DsirStreams]]) read the same table. */
   private[graft] def dsirLrTable(spark: SparkSession, dir: String): DataFrame =
-    Features.cachedFrame(spark, s"$dir#dsirLr") {
+    Features.cachedFrame(spark, dir, "dsirLr") {
       val feat = dsirFeatures(Tables.documents(spark, dir))
       val tcnt = feat.filter(col("source") === DsirTargetSource)
         .groupBy(col("f")).agg(count(lit(1)).as("t"))
@@ -2731,7 +2719,7 @@ object TextAnalysis {
   // (not just its leaf stages) makes the panel a join of cached
   // frames instead of a re-run of the whole aggregation pyramid.
   private def q117(spark: SparkSession, dir: String): DataFrame =
-    Features.cachedFrame(spark, s"$dir#q117SourcePsi") {
+    Features.cachedFrame(spark, dir, "q117SourcePsi") {
     val bucket = least(lit(PsiBuckets - 1L),
       floor(col("n_chars").cast(DoubleType) / lit(PsiStride.toDouble))
         .cast("long"))
@@ -3176,8 +3164,7 @@ object TextAnalysis {
     // driver-side replay of the trained merge list.
     val vocab =
       if (Features.bpeVocabOn(spark))
-        Features.cachedFrame(spark,
-            s"$dir#bpeVocab#${Features.bpeMerges(spark)}") {
+        Features.cachedFrame(spark, dir, "bpeVocab") {
           Bpe.mergeTable(Tables.documents(spark, dir),
               Features.bpeMerges(spark))
             .select(col("merged").as("w")).distinct()
@@ -3496,7 +3483,7 @@ object TextAnalysis {
     * 10⁶ · span — overflow needs a 9·10¹²-char document. */
   // Memoized per (session, dir): composed by the q183 trust panel.
   private def q176(spark: SparkSession, dir: String): DataFrame =
-    Features.cachedFrame(spark, s"$dir#q176EmdDrift") {
+    Features.cachedFrame(spark, dir, "q176EmdDrift") {
     val sv = Tables.documents(spark, dir)
       .select(col("source"), col("n_chars").as("v"))
       .groupBy(col("source"), col("v")).agg(count(lit(1)).as("cnt"))

@@ -78,11 +78,15 @@ class PlanMemoSpec extends AnyFunSuite with SparkSpec {
       spark.read.parquet(s"$dir/t.parquet"))
     val a = build()
     assert(build() eq a, "unchanged dir must hit the memo")
+    val stale = Features.stampsFor(spark, dir, key)
     Thread.sleep(1100) // cover coarse-mtime filesystems
     writeTable("v2")
     val b = build()
     assert(!(b eq a), "rewritten input must miss the memo")
     assert(b.select("v").collect().map(_.getString(0)).toSeq == Seq("v2"))
+    val live = Features.stampsFor(spark, dir, key)
+    assert(live.size == 1 && (live & stale).isEmpty,
+      s"the superseded entry must be released: held $live, stale $stale")
   }
 
   test("features.cache=off bypasses the memo") {

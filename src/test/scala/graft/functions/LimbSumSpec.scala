@@ -16,6 +16,12 @@ import graft.functions.LimbSum._
   */
 class LimbSumSpec extends AnyFunSuite with SparkSpec {
 
+  /** The legacy decimal-buffer forms the limb sums replaced: the
+    * equivalence reference every test below compares against. */
+  private def dsumDec(c: Column): Column = decToDouble(sum(dec(c)))
+  private def dsumRevenueDec(price: Column, discount: Column): Column =
+    decToDouble(sum(revenue(price, discount)))
+
   private def bits(x: Any): Any = x match {
     case d: java.lang.Double => java.lang.Double.doubleToRawLongBits(d)
     case other => other
