@@ -5,14 +5,14 @@ import org.apache.spark.sql.functions._
 
 import graft.pipeline.{CentroidModel, CentroidScorer, Infer, Item,
   LabelDict, Sources}
-import graft.streaming.ModelDriftStreams
+import graft.operators.Divergence
 
 /** Model-health CLI — the batch front door of the serve→monitor chain
   * ([[Train]] learns, [[Main]] serves, this WATCHES): score a new feed
   * manifest and a trusted reference manifest under the SAME shipped
   * model artifact, compare their prediction-share distributions with
   * the exact PSI the streaming monitor emits
-  * ([[ModelDriftStreams.psiU]] — one arithmetic, batch and stream
+  * ([[Divergence.psiU]] — one arithmetic, batch and stream
   * cannot drift), and ship the verdict as artifacts. The cron-job
   * twin of `streaming.ModelDriftStreams`: point it at every feed drop
   * before the labels are trusted.
@@ -177,7 +177,7 @@ object Monitor {
     require(feed.sum > 0L,
       s"feed manifest scored zero items: ${cfg.feedManifest}")
 
-    val psiU = ModelDriftStreams.psiU(feed, ref)
+    val psiU = Divergence.psiU(feed, ref)
     val verdict =
       if (psiU < cfg.investigateAt) "ok"
       else if (psiU < cfg.pageAt) "investigate"

@@ -2,7 +2,8 @@ package graft.functions
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Cast, EvalMode, Expression,
+  Literal, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.TypeUtils
 import org.apache.spark.sql.internal.SQLConf
@@ -102,13 +103,11 @@ object LimbMath {
     if (dec.changePrecision(precision, 4)) {
       java.lang.Long.valueOf(dec.toUnscaledLong)
     } else if (ansi) {
-      // same family as the Cast's SparkArithmeticException (which
-      // extends ArithmeticException) and the same error marker text
-      throw new ArithmeticException(
-        s"[NUMERIC_VALUE_OUT_OF_RANGE.WITH_SUGGESTION] $d cannot be " +
-          s"represented as Decimal($precision, 4). If necessary set " +
-          "\"spark.sql.ansi.enabled\" to \"false\" to bypass this error, " +
-          "and return NULL instead. SQLSTATE: 22003")
+      // Raise the Cast's own error (SparkArithmeticException,
+      // NUMERIC_VALUE_OUT_OF_RANGE.WITH_SUGGESTION) by evaluating the
+      // Cast: Spark's error builders are private[sql].
+      Cast(Literal(d), DecimalType(precision, 4), None, EvalMode.ANSI).eval()
+      throw new IllegalStateException(s"Cast accepted $d as Decimal($precision, 4)")
     } else null
   }
 }

@@ -17,9 +17,11 @@ import org.apache.spark.sql.types._
   * long — so the sum can run on plain long arithmetic if overflow is
   * handled. This aggregate keeps the running total as TWO longs,
   * `total = hi·10^18 + lo`, normalizing `lo` back under 8·10^18 with a
-  * carry whenever an update pushes it past (each row adds < 1.2·10^18,
-  * so `lo` never wraps; see the invariant notes inline). All buffer math
-  * is whole-stage-codegen long arithmetic — no BigDecimal anywhere.
+  * carry whenever an update pushes it past (every row and every merged
+  * buffer is first split by a truncated div/rem into a `hi` part and a
+  * remainder < 10^18, so `lo` never wraps for ANY long input; see the
+  * invariant notes inline). All buffer math is whole-stage-codegen
+  * long arithmetic — no BigDecimal anywhere.
   *
   * Exactness: integer limb addition is the same abelian-group sum as
   * decimal addition of the identical unscaled values — bit-identical
@@ -82,16 +84,17 @@ case class LimbSum(child: Expression, scale: Int, emit: Int)
   override lazy val initialValues: Seq[Expression] =
     Seq(Literal(0L), Literal(0L), Literal(false))
 
-  // Carry decision after adding x to lo: stored |lo| ≤ Thresh always
-  // (post-carry |lo| ≤ max(Thresh, |lo+x| − Carry) ≤ Thresh given
-  // |x| < 1.2e18), so lo+x < 9.2e18 never wraps.
+  // Carry decision after adding a remainder r to lo: stored |lo| ≤
+  // Thresh always (post-carry |lo| ≤ max(Thresh, |lo+r| − Carry) ≤
+  // Thresh given |r| < Carry), so |lo+r| < 9e18 never wraps.
   private def carryOf(lo1: Expression): Expression =
     If(GreaterThan(lo1, Literal(Thresh)), Literal(1L),
       If(LessThan(lo1, Literal(-Thresh)), Literal(-1L), Literal(0L)))
 
-  // Fold limb pair (bLo, bHi) into buffer (aLo, aHi); bLo may be as
-  // large as Thresh (another buffer), so pre-reduce it by a truncated
-  // div/rem split (exact identity for any signs) before the add.
+  // Fold limb pair (bLo, bHi) into buffer (aLo, aHi); bLo may be any
+  // long (a row, or another buffer's lo ≤ Thresh), so pre-reduce it by
+  // a truncated div/rem split (exact identity for any signs) before
+  // the add. The one update path for rows and buffers alike.
   private def fold(aLo: Expression, aHi: Expression,
       bLo: Expression, bHi: Expression, seenExpr: Expression): Seq[Expression] = {
     val rq = IntegralDivide(bLo, Literal(Carry))
@@ -104,19 +107,14 @@ case class LimbSum(child: Expression, scale: Int, emit: Int)
       seenExpr)
   }
 
-  override lazy val updateExpressions: Seq[Expression] =
-    if (!structIn) {
-      val lo1 = Add(lo, Coalesce(Seq(child, Literal(0L))))
-      val c = carryOf(lo1)
-      Seq(
-        Subtract(lo1, Multiply(c, Literal(Carry))),
-        Add(hi, c),
-        Or(seen, IsNotNull(child)))
-    } else {
-      val bHi = Coalesce(Seq(GetStructField(child, 0, Some("hi")), Literal(0L)))
-      val bLo = Coalesce(Seq(GetStructField(child, 1, Some("lo")), Literal(0L)))
-      fold(lo, hi, bLo, bHi, Or(seen, IsNotNull(child)))
-    }
+  override lazy val updateExpressions: Seq[Expression] = {
+    def orZero(e: Expression) = Coalesce(Seq(e, Literal(0L)))
+    val (bLo, bHi) =
+      if (structIn) (orZero(GetStructField(child, 1, Some("lo"))),
+        orZero(GetStructField(child, 0, Some("hi"))))
+      else (orZero(child), Literal(0L))
+    fold(lo, hi, bLo, bHi, Or(seen, IsNotNull(child)))
+  }
 
   override lazy val mergeExpressions: Seq[Expression] =
     fold(lo.left, hi.left, lo.right, hi.right, Or(seen.left, seen.right))
@@ -156,8 +154,9 @@ object LimbSum {
   /** lo-limb weight: total = hi·Carry + lo. A multiple of every emit
     * scale's 10^s so mod/div distribute over the limbs. */
   val Carry: Long = 1000000000000000000L
-  /** Carry threshold: stored |lo| ≤ Thresh; per-row inputs must stay
-    * < Carry − Thresh + Carry ≈ 1.2e18 (all producers bound ≤ 1e18). */
+  /** Carry threshold: stored |lo| ≤ Thresh. Any long row or buffer lo
+    * is split by `fold`'s div/rem into a remainder |r| < Carry before
+    * it is added, so |lo + r| < Thresh + Carry = 9e18 never wraps. */
   val Thresh: Long = 8000000000000000000L
 
   val EmitDouble = 0

@@ -2971,22 +2971,20 @@ object Similarity {
     * carries. Standard triage bands: < 0.1 stable, 0.1–0.25 watch,
     * > 0.25 investigate.
     *
-    * Determinism: exact int64 cell counts over the fixed domain,
-    * Laplace +1 both sides, micro-nat cell floors, exact int64 sums —
-    * q117's machinery verbatim. The domain is FIXED by design (PSI is
-    * only comparable across feeds/time over a shared domain — deriving
-    * it from the data would let a drifted feed move everyone's
-    * baseline); the flip side is that labels OUTSIDE [[LabelDomain]]
-    * would inflate the totals while contributing no cell, understating
-    * PSI — a label outside the classifier's known set is a schema
-    * violation that q62's profile / q97's relation audit must catch
-    * upstream, not a distribution shift for this monitor to absorb.
+    * Arithmetic: [[Divergence.psi]], q117's kernel. The domain is FIXED
+    * by design (PSI is only comparable across feeds/time over a shared
+    * domain — deriving it from the data would let a drifted feed move
+    * everyone's baseline); the flip side is that labels OUTSIDE
+    * [[LabelDomain]] would inflate the totals while contributing no
+    * cell, understating PSI — a label outside the classifier's known
+    * set is a schema violation that q62's profile / q97's relation
+    * audit must catch upstream, not a distribution shift for this
+    * monitor to absorb.
     *
     * Scale posture: the vec_id↔doc_id join (the relation q97 audits)
     * is the only corpus-sized operation — uniform keys, co-locatable
-    * under id bucketing; cells are ONE sources×labels
-    * partial-aggregable groupBy; the domain frame is generated, never
-    * shuffled; the report is sources-sized. */
+    * under id bucketing; the rest is the kernel's sources×labels
+    * partial-aggregable count and keys-sized reduce. */
   private[graft] val LabelDomain = 10L
 
   // Memoized per (session, dir): composed by the q174 drift panel.
@@ -2996,28 +2994,8 @@ object Similarity {
       .select(col("vec_id"), col("label").cast(LongType).as("lbl"))
       .join(Tables.documents(spark, dir)
         .select(col("doc_id").as("vec_id"), col("source")), "vec_id")
-      .groupBy(col("source"), col("lbl")).agg(count(lit(1)).as("cnt"))
-    val stot = cells.groupBy(col("source")).agg(sum(col("cnt")).as("n_s"))
-    val corp = cells.groupBy(col("lbl")).agg(sum(col("cnt")).as("ccnt"))
-    val ctot = corp.agg(sum(col("ccnt")).as("n_c"))
-    val domain = stot.select(col("source"), col("n_s"),
-      explode(sequence(lit(0L), lit(LabelDomain - 1L))).as("lbl"))
-    domain
-      .join(cells, Seq("source", "lbl"), "left")
-      .join(broadcast(corp), Seq("lbl"), "left")
-      .crossJoin(broadcast(ctot))
-      .withColumn("ps",
-        (coalesce(col("cnt"), lit(0L)) + 1L).cast(DoubleType) /
-          (col("n_s") + LabelDomain).cast(DoubleType))
-      .withColumn("pc",
-        (coalesce(col("ccnt"), lit(0L)) + 1L).cast(DoubleType) /
-          (col("n_c") + LabelDomain).cast(DoubleType))
-      .withColumn("contrib_u",
-        floor(lit(1000000.0) * (col("ps") - col("pc")) *
-          log(col("ps") / col("pc"))).cast("long"))
-      .groupBy(col("source"))
-      .agg(max(col("n_s")).as("n_vecs"), sum(col("contrib_u")).as("psi_u"))
-      .select(col("source"), col("n_vecs"), col("psi_u"))
+    Divergence.psi(cells, "source", "lbl", LabelDomain)
+      .select(col("source"), col("n").as("n_vecs"), col("psi_u"))
       .orderBy(col("psi_u").desc, col("source"))
   }
 
@@ -4673,8 +4651,8 @@ object Similarity {
     *
     * Determinism: q175's shifted-micro confidences (exact int64),
     * integer per-mille bucketing (`div 1000` on values ≥ 0 — Spark
-    * `div` == DuckDB `//` on nonnegatives), then q176's exact integer
-    * ECDF-integral arithmetic over the bucket domain.
+    * `div` == DuckDB `//` on nonnegatives), then [[Divergence.ecdf]]
+    * (q176's kernel) over the bucket domain.
     *
     * Scale posture: the corpus×k fan-out collapses to one max per
     * vector through a partial-aggregable hash aggregate (k longs per
@@ -4682,8 +4660,7 @@ object Similarity {
     * join is the narrow (doc_id, source) projection; the ECDF grid is
     * |sources| × ≤2001 buckets (the domain is BOUNDED by construction
     * — per-mille cells of a [−1, 1] cosine — unlike raw micro values,
-    * which would grow with corpus cardinality); the windows run over
-    * that grid only. */
+    * which would grow with corpus cardinality). */
   /** The per-vector top-confidence bucket frame (vec_id, b) — q182's
     * serving-path score, exposed so the streaming monitor's frozen
     * reference marginal ([[graft.streaming.ConfStreams]]) derives
@@ -4703,33 +4680,12 @@ object Similarity {
   // Memoized per (session, dir): composed by the q183 trust panel.
   private def q182(spark: SparkSession, dir: String): DataFrame =
     Features.cachedFrame(spark, dir, "q182ConfDrift") {
-    val conf = confidenceBuckets(spark, dir)
     val docs = Tables.documents(spark, dir)
       .select(col("doc_id"), col("source"))
-    val sv = conf.join(docs, col("vec_id") === col("doc_id"))
-      .groupBy(col("source"), col("b")).agg(count(lit(1)).as("cnt"))
-    val stot = sv.groupBy(col("source")).agg(sum(col("cnt")).as("stot"))
-    val cv = sv.groupBy(col("b")).agg(sum(col("cnt")).as("ccnt"))
-    val wDom = Window.orderBy(col("b"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val cc = cv.withColumn("ccum", sum(col("ccnt")).over(wDom))
-      .select(col("b"), col("ccum"))
-    val ctot = cv.agg(sum(col("ccnt")).as("ctot"))
-    val wSrc = Window.partitionBy(col("source")).orderBy(col("b"))
-    val wSrcCum = wSrc.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    // the domain side is ≤ 2001 rows BY CONSTRUCTION — broadcast it
-    // explicitly (derived-frame stats are unknown to the planner, and
-    // an unhinted cross join over unknowns degrades to CartesianProduct)
-    stot.crossJoin(broadcast(cc))
-      .join(sv, Seq("source", "b"), "left").na.fill(0L, Seq("cnt"))
-      .withColumn("scum", sum(col("cnt")).over(wSrcCum))
-      .withColumn("gap", coalesce(lead(col("b"), 1).over(wSrc), col("b")) - col("b"))
-      .crossJoin(broadcast(ctot))
-      .withColumn("f_s", expr("(1000000 * scum) div stot"))
-      .withColumn("f_c", expr("(1000000 * ccum) div ctot"))
-      .groupBy(col("source"))
-      .agg(max(col("stot")).as("n_vecs"),
-        sum(abs(col("f_s") - col("f_c")) * col("gap")).as("emd_u"))
+    val cells = confidenceBuckets(spark, dir)
+      .join(docs, col("vec_id") === col("doc_id"))
+    Divergence.ecdf(cells, "source", "b")
+      .select(col("source"), col("n").as("n_vecs"), col("emd_u"))
       .orderBy(col("emd_u").desc, col("source"))
   }
 

@@ -2699,18 +2699,10 @@ object TextAnalysis {
     * monitor can compute. Standard triage bands: < 0.1 stable,
     * 0.1–0.25 watch, > 0.25 investigate.
     *
-    * Determinism: bucket counts are exact int64 over a FIXED 8-bucket
-    * domain (Laplace +1 on both sides, so empty buckets are defined
-    * and symmetric — no corpus-size bias, the q107 add-one hazard
-    * doesn't apply because both sides smooth over the SAME domain);
-    * each cell's contribution is built from exact int64s by
-    * correctly-rounded double ops and floored to micro-nats; the
-    * per-source PSI is an exact int64 sum of those cell literals.
-    *
-    * Scale posture: ONE partial-aggregable groupBy over sources × 8
-    * cells, the corpus marginal re-aggregated from that frame (no
-    * second scan), totals broadcast; the 8×sources domain frame is
-    * generated, never shuffled. Output is sources-sized. */
+    * Arithmetic, determinism and scale posture: [[Divergence.psi]] over
+    * the FIXED 8-bucket domain (Laplace +1 on both sides, so empty
+    * buckets are defined and symmetric — the q107 add-one hazard
+    * doesn't apply because both sides smooth over the SAME domain). */
   private[graft] val PsiBuckets = 8L
   private[graft] val PsiStride = 64L
 
@@ -2725,29 +2717,8 @@ object TextAnalysis {
         .cast("long"))
     val cells = Tables.documents(spark, dir)
       .select(col("source"), bucket.as("b"))
-      .groupBy(col("source"), col("b")).agg(count(lit(1)).as("cnt"))
-    val stot = cells.groupBy(col("source")).agg(sum(col("cnt")).as("n_s"))
-    val corp = cells.groupBy(col("b")).agg(sum(col("cnt")).as("ccnt"))
-    val ctot = corp.agg(sum(col("ccnt")).as("n_c"))
-    // Full fixed domain per source: zero cells carry PSI mass too.
-    val domain = stot.select(col("source"), col("n_s"),
-      explode(sequence(lit(0L), lit(PsiBuckets - 1L))).as("b"))
-    domain
-      .join(cells, Seq("source", "b"), "left")
-      .join(broadcast(corp), Seq("b"), "left")
-      .crossJoin(broadcast(ctot))
-      .withColumn("ps",
-        (coalesce(col("cnt"), lit(0L)) + 1L).cast(DoubleType) /
-          (col("n_s") + PsiBuckets).cast(DoubleType))
-      .withColumn("pc",
-        (coalesce(col("ccnt"), lit(0L)) + 1L).cast(DoubleType) /
-          (col("n_c") + PsiBuckets).cast(DoubleType))
-      .withColumn("contrib_u",
-        floor(lit(1000000.0) * (col("ps") - col("pc")) *
-          log(col("ps") / col("pc"))).cast("long"))
-      .groupBy(col("source"))
-      .agg(max(col("n_s")).as("n_docs"), sum(col("contrib_u")).as("psi_u"))
-      .select(col("source"), col("n_docs"), col("psi_u"))
+    Divergence.psi(cells, "source", "b", PsiBuckets)
+      .select(col("source"), col("n").as("n_docs"), col("psi_u"))
       .orderBy(col("psi_u").desc, col("source"))
   }
 
@@ -3391,42 +3362,14 @@ object TextAnalysis {
     * distribution is compared against the corpus mixture; ks_u =
     * max_v |F_src(v) − F_corpus(v)| in exact micro-units (integer
     * `div` on cumulative counts — no float accumulation anywhere, so
-    * no boundary row can flip engines).
-    *
-    * Scale posture: the only corpus-sized operation is the per-(source,
-    * value) count (one partial-aggregable shuffle — q117's frame one
-    * key finer); the corpus marginal re-aggregates THAT frame; the
-    * ECDF windows run over the |sources| × |values| grid, where
-    * |values| is the distinct-length domain (bounded by the max
-    * document length, NOT the corpus row count) and each source's
-    * cumulative sum partitions by source. The one global window (the
-    * corpus ECDF) orders the |values|-sized marginal only. At 2^63-
-    * hazard scale the 10⁶-scaled cumulative products would switch to
-    * DECIMAL; int64 holds to ~9·10¹² rows. */
-  private def q154(spark: SparkSession, dir: String): DataFrame = {
-    val sv = Tables.documents(spark, dir)
-      .select(col("source"), col("n_chars").as("v"))
-      .groupBy(col("source"), col("v")).agg(count(lit(1)).as("cnt"))
-    val stot = sv.groupBy(col("source")).agg(sum(col("cnt")).as("stot"))
-    val cv = sv.groupBy(col("v")).agg(sum(col("cnt")).as("ccnt"))
-    val wDom = Window.orderBy(col("v"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val cc = cv.withColumn("ccum", sum(col("ccnt")).over(wDom))
-      .select(col("v"), col("ccum"))
-    val ctot = cv.agg(sum(col("ccnt")).as("ctot"))
-    val wSrc = Window.partitionBy(col("source")).orderBy(col("v"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    stot.crossJoin(cc) // the |sources| × |values| ECDF grid
-      .join(sv, Seq("source", "v"), "left").na.fill(0L, Seq("cnt"))
-      .withColumn("scum", sum(col("cnt")).over(wSrc))
-      .crossJoin(broadcast(ctot))
-      .withColumn("f_s", expr("(1000000 * scum) div stot"))
-      .withColumn("f_c", expr("(1000000 * ccum) div ctot"))
-      .groupBy(col("source"))
-      .agg(max(col("stot")).as("n_docs"),
-        max(abs(col("f_s") - col("f_c"))).as("ks_u"))
+    * no boundary row can flip engines). Arithmetic and scale posture:
+    * [[Divergence.ecdf]] over the distinct-length domain (bounded by
+    * the max document length, NOT the corpus row count). */
+  private def q154(spark: SparkSession, dir: String): DataFrame =
+    Divergence.ecdf(Tables.documents(spark, dir)
+        .select(col("source"), col("n_chars").as("v")), "source", "v")
+      .select(col("source"), col("n").as("n_docs"), col("ks_u"))
       .orderBy(col("ks_u").desc, col("source"))
-  }
 
   private val q154Sql =
     s"""WITH sv AS (
@@ -3471,41 +3414,16 @@ object TextAnalysis {
     * can flip engines). `emd_u` = micro-units × chars; reading it
     * `div` 10⁶ gives whole characters of mean displacement.
     *
-    * Scale posture: identical frame to q154 (deliberately — one
-    * per-(source, value) partial-aggregable count is the only
-    * corpus-sized operation, and a session running both drift
-    * statistics shares the scan shape); the ECDF windows run over the
-    * |sources| × |values| grid where |values| is bounded by the max
-    * document length, and the gap term is one `lead` in the SAME
-    * source-partitioned window order (no extra shuffle: Spark plans
-    * the running sum and the lead as one window node). Int64 headroom:
-    * |gap| ≤ 10⁶ per grid row and Σ gaps = value span, so emd_u ≤
-    * 10⁶ · span — overflow needs a 9·10¹²-char document. */
+    * Scale posture: [[Divergence.ecdf]], q154's frame deliberately — a
+    * session running both drift statistics shares the scan shape, and
+    * the gap term is one `lead` in the SAME key-partitioned window
+    * order as the running sum (one Window node, no extra shuffle). */
   // Memoized per (session, dir): composed by the q183 trust panel.
   private def q176(spark: SparkSession, dir: String): DataFrame =
     Features.cachedFrame(spark, dir, "q176EmdDrift") {
-    val sv = Tables.documents(spark, dir)
-      .select(col("source"), col("n_chars").as("v"))
-      .groupBy(col("source"), col("v")).agg(count(lit(1)).as("cnt"))
-    val stot = sv.groupBy(col("source")).agg(sum(col("cnt")).as("stot"))
-    val cv = sv.groupBy(col("v")).agg(sum(col("cnt")).as("ccnt"))
-    val wDom = Window.orderBy(col("v"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val cc = cv.withColumn("ccum", sum(col("ccnt")).over(wDom))
-      .select(col("v"), col("ccum"))
-    val ctot = cv.agg(sum(col("ccnt")).as("ctot"))
-    val wSrc = Window.partitionBy(col("source")).orderBy(col("v"))
-    val wSrcCum = wSrc.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    stot.crossJoin(cc) // the |sources| × |values| ECDF grid (q154's)
-      .join(sv, Seq("source", "v"), "left").na.fill(0L, Seq("cnt"))
-      .withColumn("scum", sum(col("cnt")).over(wSrcCum))
-      .withColumn("gap", coalesce(lead(col("v"), 1).over(wSrc), col("v")) - col("v"))
-      .crossJoin(broadcast(ctot))
-      .withColumn("f_s", expr("(1000000 * scum) div stot"))
-      .withColumn("f_c", expr("(1000000 * ccum) div ctot"))
-      .groupBy(col("source"))
-      .agg(max(col("stot")).as("n_docs"),
-        sum(abs(col("f_s") - col("f_c")) * col("gap")).as("emd_u"))
+    Divergence.ecdf(Tables.documents(spark, dir)
+        .select(col("source"), col("n_chars").as("v")), "source", "v")
+      .select(col("source"), col("n").as("n_docs"), col("emd_u"))
       .orderBy(col("emd_u").desc, col("source"))
   }
 
@@ -3663,41 +3581,18 @@ object TextAnalysis {
     * would depend on tie order), and the EMD is q176's exact
     * micro-int ECDF integral with deciles in place of sources.
     *
-    * Scale posture: q176's frame shapes exactly — one per-(decile,
-    * value) partial-aggregable count (the decile is a stateless
-    * per-row projection, no shuffle to assign), the 10 × |values| ECDF
-    * grid, windows over the grid only. The max-id anchor is one
-    * single-row aggregate broadcast back. */
+    * Scale posture: [[Divergence.ecdf]] with deciles as keys (the
+    * decile is a stateless per-row projection, no shuffle to assign);
+    * the max-id anchor is one single-row aggregate broadcast back. */
   private def q185(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir)
     val mx = docs.agg(max(col("doc_id")).as("mx"))
-    val sv = docs.select(col("doc_id"), col("n_chars").as("v"))
+    val cells = docs.select(col("doc_id"), col("n_chars").as("v"))
       .crossJoin(broadcast(mx))
       .withColumn("decile", expr("(10 * doc_id) div (mx + 1)"))
-      .groupBy(col("decile"), col("v")).agg(count(lit(1)).as("cnt"))
-    val stot = sv.groupBy(col("decile")).agg(sum(col("cnt")).as("stot"))
-    val cv = sv.groupBy(col("v")).agg(sum(col("cnt")).as("ccnt"))
-    val wDom = Window.orderBy(col("v"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val cc = cv.withColumn("ccum", sum(col("ccnt")).over(wDom))
-      .select(col("v"), col("ccum"))
-    val ctot = cv.agg(sum(col("ccnt")).as("ctot"))
-    val wD = Window.partitionBy(col("decile")).orderBy(col("v"))
-    val wDCum = wD.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    // the value-domain side is bounded by the max document length —
-    // broadcast explicitly (q182's rationale: derived-frame stats are
-    // unknown and an unhinted cross join degrades to CartesianProduct)
-    stot.crossJoin(broadcast(cc))
-      .join(sv, Seq("decile", "v"), "left").na.fill(0L, Seq("cnt"))
-      .withColumn("scum", sum(col("cnt")).over(wDCum))
-      .withColumn("gap", coalesce(lead(col("v"), 1).over(wD), col("v")) - col("v"))
-      .crossJoin(broadcast(ctot))
-      .withColumn("f_s", expr("(1000000 * scum) div stot"))
-      .withColumn("f_c", expr("(1000000 * ccum) div ctot"))
-      .groupBy(col("decile"))
-      .agg(max(col("stot")).as("n_docs"),
-        sum(abs(col("f_s") - col("f_c")) * col("gap")).as("emd_u"))
-      .withColumn("drifted", col("emd_u") >= lit(50000000L))
+    Divergence.ecdf(cells, "decile", "v")
+      .select(col("decile"), col("n").as("n_docs"), col("emd_u"),
+        (col("emd_u") >= lit(50000000L)).as("drifted"))
       .orderBy(col("decile"))
   }
 

@@ -9,12 +9,14 @@ import org.apache.spark.sql.functions.col
   * per-mille bucket against the FROZEN centroid artifact
   * ([[NoiseStreams.confBucket]] — batch q182's serving-path arithmetic
   * op-for-op), and the per-source bucket counters then ride
-  * [[KsStreams]]' exact stateful ECDF machinery against a frozen
-  * reference marginal (the blessed corpus' own confidence-bucket
-  * distribution, derived batch-side through the SAME frames as the
-  * q182 oracle). The emitted snapshot carries BOTH full-resolution
-  * drift statistics — the max ECDF gap (KS) and the mass-weighted
-  * integral (EMD, q182's number) — from one walk of the state.
+  * [[KsStreams]]' exact stateful ECDF machinery (read by
+  * [[graft.operators.Divergence.ksEmdU]], q182's scalar replay)
+  * against a frozen reference marginal (the blessed corpus' own
+  * confidence-bucket distribution, derived batch-side through the
+  * SAME frames as the q182 oracle). The emitted snapshot carries BOTH
+  * full-resolution drift statistics — the max ECDF gap (KS) and the
+  * mass-weighted integral (EMD, q182's number) — from one walk of the
+  * state.
   *
   * Why watch this: confidence mass slides toward the decision boundary
   * BEFORE the argmax flips — a feed can pass every label check

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions.{col, count, lit}
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
 
+import graft.operators.Divergence
+
 /** STREAMING exact-KS + Wasserstein drift monitor — the
   * full-resolution member of the streaming drift family, completing
   * the PSI-vs-KS trade batch q117/q154 document: [[PsiStreams]] keeps
@@ -23,9 +25,10 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
   * regardless of row count). The counters are an exact int64 monoid,
   * so after any number of micro-batches the emitted statistic is
   * bit-identical to the batch arithmetic over everything seen —
-  * [[ksU]] replays q154's integer ECDF math exactly (micro-unit
-  * `div` on cumulative counts, no float accumulation), and the spec
-  * pins a full-corpus stream equal to batch q154 per source.
+  * [[graft.operators.Divergence.ksEmdU]] is the scalar replay of the
+  * batch kernel q154/q176 run (micro-unit `div` on cumulative counts,
+  * no float accumulation), and the spec pins a full-corpus stream
+  * equal to batch q154 and q176 per source.
   *
   * Scale posture: docs shuffle once, keyed by source, into the
   * stateful operator; the reference rides the closure (value-domain-
@@ -35,38 +38,6 @@ object KsStreams {
   final case class KsState(values: Map[Long, Long])
   final case class KsSnapshot(source: String, n_docs: Long, ks_u: Long,
       emd_u: Long)
-
-  /** q154's exact integer ECDF-gap arithmetic: walk the merged sorted
-    * value domain, cumulate both sides, take the max micro-unit gap.
-    * Shared by the stream and the spec's batch replay. */
-  def ksU(counts: Map[Long, Long], ref: Seq[(Long, Long)]): Long =
-    ksEmdU(counts, ref)._1
-
-  /** Both drift statistics off ONE walk of the merged value domain —
-    * the per-value counters the state already holds are the sufficient
-    * statistic for the whole ECDF, so the max gap (KS, q154) and the
-    * mass-weighted integral (1-D Wasserstein, q176: Σ|F_s−F_r|·gap
-    * with gap = next_v − v, 0 at the domain end) are two reads of the
-    * same cumulation. Integer micro-unit `div` throughout — replays
-    * both batch queries' arithmetic exactly, so boundary snapshots are
-    * bit-equal to q154/q176 (spec-pinned). */
-  def ksEmdU(counts: Map[Long, Long], ref: Seq[(Long, Long)]): (Long, Long) = {
-    val stot = counts.valuesIterator.sum
-    val rtot = ref.iterator.map(_._2).sum
-    if (stot == 0L || rtot == 0L) return (0L, 0L)
-    val refMap = ref.toMap
-    val dom = (counts.keySet ++ refMap.keySet).toSeq.sorted
-    var scum = 0L; var rcum = 0L; var ks = 0L; var emd = 0L
-    dom.indices.foreach { i =>
-      val v = dom(i)
-      scum += counts.getOrElse(v, 0L)
-      rcum += refMap.getOrElse(v, 0L)
-      val d = math.abs(1000000L * scum / stot - 1000000L * rcum / rtot)
-      if (d > ks) ks = d
-      if (i + 1 < dom.size) emd += d * (dom(i + 1) - v)
-    }
-    (ks, emd)
-  }
 
   /** The frozen reference: the trusted corpus' value marginal
     * (needs n_chars). Value-domain-sized — ships in the closure. */
@@ -109,7 +80,7 @@ object KsStreams {
     rows.foreach { case (_, v) => acc(v) = acc.getOrElse(v, 0L) + 1L }
     val counts = acc.iterator.map { case (v, c) => (v, c) }.toMap
     state.update(KsState(counts))
-    val (ks, emd) = ksEmdU(counts, ref)
+    val (ks, emd) = Divergence.ksEmdU(counts, ref)
     KsSnapshot(src, counts.valuesIterator.sum, ks, emd)
   }
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.{col, count, lit}
 import org.apache.spark.sql.streaming.StreamingQuery
 
+import graft.operators.Divergence
 import graft.pipeline.LabelDict
 
 /** MODEL-DRIFT MONITOR — prediction-share PSI over the SERVED model's
@@ -19,10 +20,10 @@ import graft.pipeline.LabelDict
   *
   * Exactness: state is `classes` int64 prediction counters — bounded
   * forever, regardless of stream length — and the PSI arithmetic is
-  * the PsiStreams cell recipe verbatim (Laplace smoothing over the
-  * fixed class domain, per-cell micro-nat floor, exact int64 sum), so
-  * every emitted statistic is bit-identical to a driver replay over
-  * everything seen (spec-pinned at every batch boundary).
+  * [[Divergence.psiU]] over the fixed class domain (PsiStreams' and
+  * batch q117/q126's one definition), so every emitted statistic is
+  * bit-identical to a driver replay over everything seen (spec-pinned
+  * at every batch boundary).
   *
   * Frozen-artifact posture: the reference share is computed BATCH-side
   * from the trusted corpus' predictions under the SAME model
@@ -65,26 +66,6 @@ object ModelDriftStreams {
   final case class ShareSnapshot(n_preds: Long, psi_u: Long,
       counts: Seq[Long], n_unknown: Long)
 
-  /** [[PsiStreams.psiU]]'s identical double-op sequence over a
-    * parametric class domain (one subtraction, one ln of a
-    * correctly-rounded ratio, left-associated multiply, micro-floor,
-    * exact int64 sum). */
-  def psiU(counts: Array[Long], ref: Array[Long]): Long = {
-    require(counts.length == ref.length, "class domains differ")
-    val k = counts.length
-    val nS = counts.sum
-    val nC = ref.sum
-    var acc = 0L
-    var i = 0
-    while (i < k) {
-      val ps = (counts(i) + 1L).toDouble / (nS + k).toDouble
-      val pc = (ref(i) + 1L).toDouble / (nC + k).toDouble
-      acc += math.floor(1000000.0 * (ps - pc) * math.log(ps / pc)).toLong
-      i += 1
-    }
-    acc
-  }
-
   /** The frozen reference: per-class prediction counts of the trusted
     * corpus under the same model — `classes` longs, ships in the
     * closure. `preds` needs a `label` column (a batch
@@ -122,7 +103,8 @@ object ModelDriftStreams {
             }
           }
       }
-      ShareSnapshot(counts.sum, psiU(counts, ref), counts.toSeq, unknown)
+      ShareSnapshot(counts.sum, Divergence.psiU(counts, ref), counts.toSeq,
+        unknown)
     }
   }
 

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
 
-import graft.operators.TextAnalysis
+import graft.operators.{Divergence, TextAnalysis}
 
 /** STREAMING length-PSI monitor — the stateful twin of batch q117 and
   * the third member of the streaming drift family ([[DriftStreams]]
@@ -21,9 +21,9 @@ import graft.operators.TextAnalysis
   * source, forever, regardless of stream length — and the counts are
   * EXACT, so after any number of micro-batches the emitted PSI is
   * bit-identical to batch q117's arithmetic over everything seen
-  * (same Laplace smoothing, same per-cell micro-nat floor, same exact
-  * int64 sum — spec-pinned against batch q117 when the reference is
-  * the corpus' own marginal).
+  * ([[Divergence.psiU]], the scalar replay of q117's kernel —
+  * spec-pinned against batch q117 when the reference is the corpus'
+  * own marginal).
   *
   * Scale posture: docs shuffle once, keyed by source, into the
   * stateful operator; the reference is [[TextAnalysis.PsiBuckets]]
@@ -38,19 +38,6 @@ object PsiStreams {
   /** q117's bucket assignment: 64-char strides, open-topped. */
   def bucketOf(nChars: Long): Int =
     math.min(B - 1L, nChars / TextAnalysis.PsiStride).toInt
-
-  /** q117's cell arithmetic, shared with the spec's batch replay: both
-    * sides Laplace-smoothed over the SAME fixed domain, each cell's
-    * contribution floored to micro-nats (the identical double-op
-    * sequence the batch plan runs: one subtraction, one ln of a
-    * correctly-rounded ratio, left-associated multiply), summed as
-    * exact int64. */
-  def psiU(counts: Array[Long], ref: Array[Long]): Long =
-    // ONE definition of the bit-identity-critical cell sequence: the
-    // parametric-domain version in [[ModelDriftStreams.psiU]] (this is
-    // its fixed-B special case — delegating keeps the two monitors'
-    // exact-replay guarantees provably the same arithmetic).
-    ModelDriftStreams.psiU(counts, ref)
 
   /** The frozen reference: the trusted corpus' bucket marginal,
     * computed batch-side from a documents frame (needs n_chars).
@@ -90,6 +77,6 @@ object PsiStreams {
       .getOrElse(new Array[Long](B))
     rows.foreach { case (_, n) => counts(bucketOf(n)) += 1L }
     state.update(PsiState(counts))
-    PsiSnapshot(src, counts.sum, psiU(counts, ref))
+    PsiSnapshot(src, counts.sum, Divergence.psiU(counts, ref))
   }
 }

@@ -8,7 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
 
 import graft.pipeline.{CentroidModel, CentroidSums, Media}
-import graft.streaming.ModelDriftStreams
+import graft.operators.Divergence
 
 /** graft.Monitor: the batch model-health CLI. A feed matching the
   * trusted reference mix reads `ok` with the summary equal to an exact
@@ -94,7 +94,7 @@ class MonitorSpec extends AnyFunSuite with SparkSpec with Matchers {
       "--centroid", model, "--ref", refM, "--fail-on-page"),
       Some(spark)) shouldBe 0
     val sum1 = readJsonDir(out1.resolve("summary")).mkString
-    val expPsi = ModelDriftStreams.psiU(replay(okPaths), refCounts)
+    val expPsi = Divergence.psiU(replay(okPaths), refCounts)
     sum1 should include(s""""psi_u":$expPsi""")
     sum1 should include(""""verdict":"ok"""")
     expPsi should be < 100000L
@@ -111,7 +111,7 @@ class MonitorSpec extends AnyFunSuite with SparkSpec with Matchers {
       Some(spark)) shouldBe 1
     val sum2 = readJsonDir(out2.resolve("summary")).mkString
     sum2 should include(""""verdict":"page"""")
-    ModelDriftStreams.psiU(replay(floodPaths),
+    Divergence.psiU(replay(floodPaths),
       refCounts) should be >= 250000L
 
     // without --fail-on-page the same page verdict exits 0

@@ -2,6 +2,8 @@ package graft.functions
 
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.scalacheck.Gen
+import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkSpec
@@ -188,5 +190,72 @@ class LimbSumSpec extends AnyFunSuite with SparkSpec {
       .queryExecution.executedPlan.toString
     assert(plan.contains("graft_limb_sum"), plan.take(2000))
     assert(!plan.toLowerCase.contains("sum(cast("), plan.take(2000))
+  }
+
+  test("EmitStruct limbs rebuild the exact BigInt sum of any long rows, " +
+      "over random partition counts") {
+    import spark.implicits._
+    // Per-row magnitudes far past the 1e18 the update once assumed:
+    // q239's guard admits products up to 9e18, and two such rows
+    // wrapped `lo` before the row update shared `fold`'s div/rem split.
+    val row: Gen[Long] = Gen.frequency(
+      3 -> Gen.oneOf(9000000000000000000L, -9000000000000000000L,
+        Long.MaxValue / 2, -(Long.MaxValue / 2), Long.MaxValue),
+      2 -> Gen.long,
+      2 -> Gen.choose(-2000000000000000000L, 2000000000000000000L),
+      1 -> Gen.choose(-1000L, 1000L))
+    val draw = for {
+      n <- Gen.choose(1, 60)
+      xs <- Gen.listOfN(n, row)
+      parts <- Gen.choose(1, 8)
+    } yield (xs, parts)
+    (0 until 20).flatMap(i => draw(Gen.Parameters.default, Seed(i.toLong)))
+      .foreach { case (xs, parts) =>
+        val keyed = xs.zipWithIndex.map { case (x, i) => (i % 3, x) }
+        val got = keyed.toDF("g", "v").repartition(parts)
+          .groupBy("g").agg(limbStruct(col("v")).as("p")).collect()
+          .map { r =>
+            val st = r.getStruct(1)
+            r.getInt(0) -> (BigInt(st.getLong(0)) * BigInt(Carry) +
+              BigInt(st.getLong(1)))
+          }.toMap
+        val want = keyed.groupMapReduce(_._1)(kv => BigInt(kv._2))(_ + _)
+        assert(got == want, s"rows $xs over $parts partitions")
+      }
+  }
+
+  test("u4's ANSI overflow raises the Cast's own exception class and " +
+      "error condition") {
+    import org.apache.spark.SparkThrowable
+    import org.apache.spark.sql.catalyst.expressions.{Cast, EvalMode, Literal}
+    import org.apache.spark.sql.types.DecimalType
+    import spark.implicits._
+    def sparkError(t: Throwable): Throwable = t match {
+      case null => fail("no SparkThrowable in the cause chain")
+      case s: SparkThrowable => s
+      case other => sparkError(other.getCause)
+    }
+    def condition(t: Throwable): String =
+      t.asInstanceOf[SparkThrowable].getCondition
+    // interpreted: the expressions themselves
+    val cast = intercept[ArithmeticException] {
+      Cast(Literal(2.0e15), DecimalType(18, 4), None, EvalMode.ANSI).eval()
+    }
+    val u4e = intercept[ArithmeticException] {
+      DoubleScaledLong(Literal(2.0e15), 18, ansi = true).eval()
+    }
+    assert(u4e.getClass == cast.getClass)
+    assert(condition(u4e) == condition(cast))
+    // and through a planned query under the session's ANSI mode
+    assert(spark.conf.get("spark.sql.ansi.enabled") == "true")
+    val over = Seq(2.0e15).toDF("v")
+    val castQ = sparkError(intercept[Exception] {
+      over.select(col("v").cast(DecimalType(18, 4))).collect()
+    })
+    val u4Q = sparkError(intercept[Exception] {
+      over.select(u4(col("v"))).collect()
+    })
+    assert(u4Q.getClass == castQ.getClass)
+    assert(condition(u4Q) == condition(castQ))
   }
 }

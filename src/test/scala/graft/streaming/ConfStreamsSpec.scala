@@ -4,7 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
 
 import graft.{SparkEntry, SparkSpec}
-import graft.operators.Similarity
+import graft.operators.{Divergence, Similarity}
 
 /** The streaming confidence-drift monitor must be exactly batch q182
   * over everything seen: with the artifact and marginal frozen from
@@ -59,7 +59,7 @@ class ConfStreamsSpec extends AnyFunSuite with SparkSpec with Matchers {
             val counts = rs.groupBy(r =>
               NoiseStreams.confBucket(ref, r._2)).view
               .mapValues(_.size.toLong).toMap
-            val (ks, emd) = KsStreams.ksEmdU(counts, marginal)
+            val (ks, emd) = Divergence.ksEmdU(counts, marginal)
             latest(src).n_docs shouldBe rs.size.toLong
             latest(src).ks_u shouldBe ks
             latest(src).emd_u shouldBe emd

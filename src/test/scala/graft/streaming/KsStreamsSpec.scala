@@ -4,6 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
 
 import graft.{SparkEntry, SparkSpec}
+import graft.operators.Divergence
 
 /** The streaming KS monitor must be exactly the batch computation over
   * everything seen: with the reference set to the corpus' own value
@@ -48,7 +49,7 @@ class KsStreamsSpec extends AnyFunSuite with SparkSpec with Matchers {
             val counts = rs.groupBy(_._2).view
               .mapValues(_.size.toLong).toMap
             latest(src).n_docs shouldBe rs.size.toLong
-            val (ks, emd) = KsStreams.ksEmdU(counts, ref)
+            val (ks, emd) = Divergence.ksEmdU(counts, ref)
             latest(src).ks_u shouldBe ks
             latest(src).emd_u shouldBe emd
           }

@@ -6,6 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
 
 import graft.SparkSpec
+import graft.operators.Divergence
 import graft.pipeline._
 
 /** The model-drift monitor over the full serve→monitor chain: a
@@ -89,9 +90,9 @@ class ModelDriftStreamsSpec extends AnyFunSuite with SparkSpec with Matchers {
     val c12 = predicted(b1 ++ b2)
     snapshots.toSeq shouldBe Seq(
       ModelDriftStreams.ShareSnapshot(8L,
-        ModelDriftStreams.psiU(c1, ref), c1.toSeq, 0L),
+        Divergence.psiU(c1, ref), c1.toSeq, 0L),
       ModelDriftStreams.ShareSnapshot(20L,
-        ModelDriftStreams.psiU(c12, ref), c12.toSeq, 0L))
+        Divergence.psiU(c12, ref), c12.toSeq, 0L))
 
     // semantics: balanced feed near zero, the flood alarms hard
     snapshots(0).psi_u should be < 10000L   // < 0.01 nats
@@ -109,7 +110,7 @@ class ModelDriftStreamsSpec extends AnyFunSuite with SparkSpec with Matchers {
     val b0 = Seq("dark", "dark", "bright").toDF("label")
     val s0 = fold.fold(b0, 0L)
     s0 shouldBe ModelDriftStreams.ShareSnapshot(3L,
-      ModelDriftStreams.psiU(Array(2L, 1L), ref), Seq(2L, 1L), 0L)
+      Divergence.psiU(Array(2L, 1L), ref), Seq(2L, 1L), 0L)
 
     // at-least-once redelivery: strict no-op (counts not idempotent)
     fold.fold(b0, 0L) shouldBe s0

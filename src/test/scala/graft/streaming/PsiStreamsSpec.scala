@@ -4,6 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
 
 import graft.{SparkEntry, SparkSpec}
+import graft.operators.Divergence
 
 /** The streaming PSI monitor must be exactly the batch computation
   * over everything seen: with the reference set to the corpus' own
@@ -53,7 +54,7 @@ class PsiStreamsSpec extends AnyFunSuite with SparkSpec with Matchers {
               counts(PsiStreams.bucketOf(n)) += 1L
             }
             latest(src).n_docs shouldBe rs.size.toLong
-            latest(src).psi_u shouldBe PsiStreams.psiU(counts, ref)
+            latest(src).psi_u shouldBe Divergence.psiU(counts, ref)
           }
         }
       }

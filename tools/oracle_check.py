@@ -56,11 +56,14 @@ def main():
                 f"CREATE VIEW {t} AS SELECT * FROM '{path}'")
     oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
     n_pass = n_fail = 0
+    absent = []
     import os
     for name, sql in sorted(oracle.items()):
-        # Partial-dump mode (local iteration): a Verify restricted to a
-        # few names leaves the rest absent — skip, don't fail, them.
+        # No result dir: either a partial dump (a Verify restricted to a
+        # few names) or a query that threw, for which Verify writes
+        # nothing. Neither compares; both are counted and named below.
         if not os.path.isdir(f"{out_dir}/{name}"):
+            absent.append(name)
             continue
         try:
             spark_rel = con.sql(
@@ -112,10 +115,13 @@ def main():
             n_pass += 1
             results[name] = {"rows": len(sr), "schema_match": True,
                              "hash_match": True}
-    print(f"== {n_pass} pass / {n_fail} fail ==")
+    if absent:
+        print(f"ABSENT ({len(absent)}): {' '.join(absent)}")
+    print(f"== {n_pass} pass / {n_fail} fail / {len(absent)} absent ==")
     if json_out:
         json.dump({"sf_dir": sf_dir, "pass": n_pass, "fail": n_fail,
-                   "queries": results}, open(json_out, "w"), indent=1)
+                   "absent": absent, "queries": results},
+                  open(json_out, "w"), indent=1)
     sys.exit(1 if n_fail else 0)
 
 
